@@ -1657,7 +1657,7 @@ def q_image_features(spark, sf_dir):
     # production path) and the operator under test: never two chained
     # Python stages in one task (CLAUDE.md hard rule)
     media = media.repartition(8)
-    return (mm.image_features(media, codec="ppm")
+    return (mm.image_features(media)
             .select(F.col("url").cast("long").alias("doc_id"),
                     "width", "height", "mean_r", "mean_g", "mean_b",
                     "valid")
@@ -1694,7 +1694,7 @@ def q_audio_features(spark, sf_dir):
 
     media = docs.mapInPandas(_mk, schema="url string, payload binary")
     media = media.repartition(8)  # exchange: no chained Python stages
-    return (mm.audio_features(media, codec="wav")
+    return (mm.audio_features(media)
             .select(F.col("url").cast("long").alias("doc_id"),
                     "sample_rate", "n_samples", "duration_s", "rms",
                     "peak", "zero_crossings", "valid")

@@ -17,7 +17,7 @@ PySpark DataFrame operators over web-scale page corpora:
 - training-data ops (dedup incl. line-level, minhash/simhash,
   lang-id, PII scrub, decontamination, packing, BPE counts, ...)
                                                               -> text
-- embedding similarity search + SemDeDup (LSH/IVF-bucketed)   -> sim
+- embedding similarity search + SemDeDup (IVF-bucketed)       -> sim
 - connected components for dedup clusters (hash-min)          -> graph
 - real multimodal codecs (PPM / WAV / Y4M) + features         -> multimodal
 - temporal as-of join                                         -> temporal

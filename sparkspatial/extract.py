@@ -139,8 +139,3 @@ def geotag(df: DataFrame, domain_col: str, url_col: str,
     """JVM-side canonical geocode (whole-stage codegen, no Python)."""
     return df.withColumn(lat_col, F.expr(lat_sql(domain_col, url_col, "spark"))) \
              .withColumn(lon_col, F.expr(lon_sql(domain_col, url_col, "spark")))
-
-
-def domain_of(url_col: str = "url"):
-    """Column expr: domain part of a url (prefix before first '/')."""
-    return F.substring_index(F.col(url_col), "/", 1)

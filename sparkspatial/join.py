@@ -160,14 +160,6 @@ def cover_polygons(polys: DataFrame, poly_id: str = "zone_id",
     return polys.mapInPandas(_cover, schema=out_schema)
 
 
-def required_res(polys: DataFrame, poly_id: str, wkb_col: str, res: int,
-                 max_cells_per_poly: int) -> int:
-    """The finest resolution <= `res` at which EVERY polygon's bbox
-    cover fits in `max_cells_per_poly` cells."""
-    r, _ = cover_stats(polys, poly_id, wkb_col, res, max_cells_per_poly)
-    return r
-
-
 def cover_stats(polys: DataFrame, poly_id: str, wkb_col: str, res: int,
                 max_cells_per_poly: int) -> tuple[int, int]:
     """(global resolution, total cover rows at it) in one stats pass.
@@ -698,16 +690,6 @@ def spatial_join_polygons(probes: DataFrame, zones: DataFrame | None = None,
         ids = matched.select(probe_id).distinct()
         return probes.join(ids, on=probe_id, how=how)
     raise ValueError(f"unsupported how={how!r}")
-
-
-def spatial_join_bbox_sql(points_sql: str, zones_values_sql: str,
-                          lat_expr: str, lon_expr: str) -> str:
-    """Helper for oracle parity: ANSI-SQL equivalent of a rect-zone
-    spatial join (DuckDB side of the driver's correctness gate)."""
-    return (f"SELECT p.*, z.zone_id FROM ({points_sql}) p "
-            f"JOIN ({zones_values_sql}) z "
-            f"ON {lat_expr} >= z.miny AND {lat_expr} <= z.maxy "
-            f"AND {lon_expr} >= z.minx AND {lon_expr} <= z.maxx")
 
 
 def _require_cols(points: DataFrame, keep_cols: tuple, op: str) -> None:

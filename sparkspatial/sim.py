@@ -6,12 +6,11 @@ Two paths (task brief "similarity search"):
   broadcast against the corpus, dot products computed in a vectorized
   Arrow batch (numpy matmul per batch — one BLAS call per 64k rows),
   window top-k per query. The baseline and the oracle.
-- :func:`lsh_topk` — random-hyperplane LSH buckets: deterministic
-  h32-seeded hyperplanes, sign-bit bucket key, exact re-rank within
-  bucket (+ optional multi-probe by flipping one bit). Approximate;
-  its recall against cosine_topk is the test metric. At corpus scale
-  the bucket join replaces the full scan with an equi-join on the
-  bucket key.
+- :func:`ivf_topk` — IVF buckets: deterministic k-means centroids,
+  equi-join on the probed clusters, exact re-rank within them.
+  Approximate unless every cluster is probed; its recall against
+  cosine_topk is the test metric. At corpus scale the cluster join
+  replaces the full scan.
 
 Ties break deterministically by (-cos, id).
 """
@@ -26,12 +25,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .hashing import h32
-
-
-def _hyperplanes(dim: int, n_bits: int) -> np.ndarray:
-    """Deterministic pseudo-random hyperplanes from the h32 family."""
-    rng = np.random.RandomState(h32(f"lsh-hyperplanes-{dim}-{n_bits}") % (2**31))
-    return rng.standard_normal((n_bits, dim)).astype(np.float64)
 
 
 def _topk_order(ids: np.ndarray, cos_row: np.ndarray, kk: int) -> np.ndarray:
@@ -217,8 +210,8 @@ def cosine_pairs_blocked(corpus: DataFrame, threshold: float, *,
     a block fits an executor), shuffle volume n*n_blocks rows, driver
     state ZERO. Compute stays O(n^2) dot products — inherent to an
     EXACT threshold join over dense vectors; the sub-quadratic
-    alternatives are the approximate paths (add_lsh_buckets /
-    ivf_topk) which trade recall for candidate-only scoring.
+    alternative is the approximate :func:`ivf_topk`, which trades
+    recall for candidate-only scoring.
     `cosine_pairs` (driver-broadcast) remains as the small-corpus
     test oracle only.
     """
@@ -294,8 +287,7 @@ def knn_graph(corpus: DataFrame, k: int, *, id_col: str = "vec_id",
     rows out (k << block size, so the re-rank exchange is tiny);
     per-task memory 2n/n_blocks (pick n_blocks so a block pair fits
     an executor). Compute stays O(n^2) dot products — the EXACT
-    contract; ivf_topk / lsh_topk are the approximate sub-quadratic
-    paths.
+    contract; ivf_topk is the approximate sub-quadratic path.
     """
     id_type = corpus.schema[id_col].dataType.simpleString()
     base = corpus.select(id_col, vec_col).withColumn(
@@ -439,8 +431,8 @@ def cosine_topk_blocked(corpus: DataFrame, queries: DataFrame, k: int, *,
     Scale shape: shuffle n_q*c_blocks + n_c*q_blocks rows; per-task
     memory n_q/q_blocks + n_c/c_blocks rows (size the block counts so
     one group fits an executor); driver state ZERO. Compute stays
-    O(n_q*n_c) dot products — the EXACT contract; lsh_topk/ivf_topk
-    are the approximate sub-quadratic paths.
+    O(n_q*n_c) dot products — the EXACT contract; ivf_topk is the
+    approximate sub-quadratic path.
     """
     id_type = corpus.schema[id_col].dataType.simpleString()
     qid_type = queries.schema[qid_col].dataType.simpleString()
@@ -507,105 +499,6 @@ def cosine_pairs_duckdb_sql(threshold: str,
                  * sqrt(list_dot_product(b.embedding, b.embedding)))
               >= {threshold}
     """
-
-
-def add_lsh_buckets(df: DataFrame, *, vec_col: str = "embedding",
-                    n_bits: int = 8, n_tables: int = 8,
-                    out_col: str = "bucket",
-                    multiprobe: int = 0) -> DataFrame:
-    """Explode each row into `n_tables` (table, bucket) keys.
-
-    Bucket = sign bits against that table's deterministic hyperplanes,
-    packed with the table id. `multiprobe` > 0 additionally emits the
-    n_bits Hamming-1 neighbor buckets per table (query-side recall
-    knob).
-    """
-    schema_in = [f.name for f in df.schema.fields]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"{out_col} long"])
-
-    def _bucket(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float64)
-                            for v in pdf[vec_col]])
-            if planes is None:
-                planes = [_table_hyperplanes(mat.shape[1], n_bits, t)
-                          for t in range(n_tables)]
-            frames = []
-            for t in range(n_tables):
-                bits = (mat @ planes[t].T) > 0
-                key = np.zeros(len(pdf), dtype=np.int64)
-                for b in range(n_bits):
-                    key |= bits[:, b].astype(np.int64) << b
-                base = np.int64(t) << 32
-                frames.append(pdf[schema_in].assign(**{out_col: base | key}))
-                for m in range(multiprobe):
-                    for b in range(n_bits):
-                        frames.append(pdf[schema_in].assign(
-                            **{out_col: base | (key ^ (1 << b))}))
-                    break  # Hamming-1 only; deeper probes explode rowcount
-            yield pd.concat(frames, ignore_index=True)
-
-    return df.mapInPandas(_bucket, schema=out_schema)
-
-
-def _table_hyperplanes(dim: int, n_bits: int, table: int) -> np.ndarray:
-    rng = np.random.RandomState(
-        h32(f"lsh-table-{table}-{dim}-{n_bits}") % (2**31))
-    return rng.standard_normal((n_bits, dim)).astype(np.float64)
-
-
-def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int, *,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             qid_col: str = "qid", qvec_col: str = "qvec",
-             n_bits: int = 8, n_tables: int = 8,
-             multiprobe: int = 1) -> DataFrame:
-    """Approximate top-k: multi-table LSH bucket join, exact re-rank.
-
-    Recall grows with `n_tables` (independent chances to collide) and
-    `multiprobe` (Hamming-1 query buckets); cost grows linearly in
-    both. At corpus scale the bucket equi-join replaces the full scan.
-    """
-    c = add_lsh_buckets(corpus, vec_col=vec_col, n_bits=n_bits,
-                        n_tables=n_tables)
-    q = add_lsh_buckets(
-        queries.select(F.col(qid_col), F.col(qvec_col).alias(vec_col)),
-        vec_col=vec_col, n_bits=n_bits, n_tables=n_tables,
-        multiprobe=multiprobe)
-    q = q.select(F.col(qid_col).alias("qid"),
-                 F.col(vec_col).alias("_qvec"), "bucket")
-    cand = c.join(F.broadcast(q), on="bucket", how="inner") \
-            .where(F.col("qid") != F.col(id_col))
-
-    schema = f"qid long, {id_col} long, cos double"
-
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            b = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["_qvec"]])
-            na = np.linalg.norm(a, axis=1)
-            nb = np.linalg.norm(b, axis=1)
-            na[na == 0] = 1.0
-            nb[nb == 0] = 1.0
-            cos = (a * b).sum(axis=1) / na / nb
-            yield pd.DataFrame({"qid": pdf["qid"].to_numpy(),
-                                id_col: pdf[id_col].to_numpy(),
-                                "cos": cos})
-
-    scored = cand.select("qid", id_col, vec_col, "_qvec") \
-        .mapInPandas(_score, schema=schema).dropDuplicates(["qid", id_col])
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(),
-                                          F.col(id_col).asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k))
 
 
 def ivf_centroids(corpus: DataFrame, n_clusters: int = 16, *,
