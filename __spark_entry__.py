@@ -1936,13 +1936,48 @@ def q_extract_roundtrip(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering is evidence-bearing: the driver's CORRECTNESS sampling takes
-    # the FIRST 50 entries, so entries that have never appeared hash-green in
-    # a CORRECTNESS_r*.json lead (r4 verdict item 1), followed by the rest of
-    # the previously-unsampled tail, then the long-green head. Every entry
-    # keeps its oracle twin regardless of position (tools/oracle_check.py
-    # runs all 83: 81 hash + 2 documented rows-only).
+    # Ordering is evidence-bearing: each CORRECTNESS_r*.json records hash
+    # checks for a window of leading entries only (48-50 names in r5/r6),
+    # so the 33 names absent from both CORRECTNESS_r05.json and
+    # CORRECTNESS_r06.json lead, followed by the entries checked there in
+    # their earlier order.
+    # Every entry keeps its oracle twin regardless of position
+    # (tools/oracle_check.py runs all 83: 81 hash + 2 documented rows-only).
     return {
+        # --- 33 entries absent from CORRECTNESS_r05/r06 ---
+        "grid_rollup": q_grid_rollup,
+        "grid_lang_histogram": q_grid_lang_histogram,
+        "grid_indicators_full": q_grid_indicators_full,
+        "zone_grid_indicators": q_zone_grid_indicators,
+        "cube_counts": q_cube_counts,
+        "quantiles": q_quantiles,
+        "knn": q_knn,
+        "range_join": q_range_join,
+        "zone_envelope": q_zone_envelope,
+        "tessellate": q_tessellate,
+        "sessionize": q_sessionize,
+        "asof_join": q_asof_join,
+        "line_dedup": q_line_dedup,
+        "decontaminate": q_decontaminate,
+        "contamination_report": q_contamination_report,
+        "pii_scrub": q_pii_scrub,
+        "pack_sequences": q_pack_sequences,
+        "url_host_stats": q_url_host_stats,
+        "near_dedup_components": q_near_dedup_components,
+        "gopher_filter": q_gopher_filter,
+        "corpus_stats": q_corpus_stats,
+        "token_count_bpe": q_token_count_bpe,
+        "image_features": q_image_features,
+        "audio_features": q_audio_features,
+        "video_frames": q_video_frames,
+        "vocab_topk": q_vocab_topk,
+        "stratified_sample": q_stratified_sample,
+        "pack_manifest": q_pack_manifest,
+        "winnow_fingerprints": q_winnow_fingerprints,
+        "winnow_pairs": q_winnow_pairs,
+        "duplicated_spans": q_duplicated_spans,
+        "dedup_substrings": q_dedup_substrings,
+        "repetition": q_repetition,
         # --- 9 entries with no driver-side evidence through r4 ---
         "building_type_full": q_building_type_full,
         "road_classify_full": q_road_classify_full,
@@ -1981,7 +2016,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "near_dedup_survivors": q_near_dedup_survivors,
         "ann_cosine": q_ann_cosine,
         "extract_roundtrip": q_extract_roundtrip,
-        # --- long-green head (hash evidence in CORRECTNESS_r01–r04) ---
+        # --- long-green (hash evidence in CORRECTNESS_r01–r04) ---
         "spatial_join_counts": q_spatial_join_counts,
         "spatial_join_pairs": q_spatial_join_pairs,
         "spatial_join_shuffle_salted": q_spatial_join_shuffle_salted,
@@ -1997,39 +2032,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spatial_semijoin": q_spatial_semijoin,
         "grid_counts": q_grid_counts,
         "geohash_counts": q_geohash_counts,
-        "grid_rollup": q_grid_rollup,
-        "grid_lang_histogram": q_grid_lang_histogram,
-        "grid_indicators_full": q_grid_indicators_full,
-        "zone_grid_indicators": q_zone_grid_indicators,
-        "cube_counts": q_cube_counts,
-        "quantiles": q_quantiles,
-        "knn": q_knn,
-        "range_join": q_range_join,
-        "zone_envelope": q_zone_envelope,
-        "tessellate": q_tessellate,
-        "sessionize": q_sessionize,
-        "asof_join": q_asof_join,
-        "line_dedup": q_line_dedup,
-        "decontaminate": q_decontaminate,
-        "contamination_report": q_contamination_report,
-        "pii_scrub": q_pii_scrub,
-        "pack_sequences": q_pack_sequences,
-        "url_host_stats": q_url_host_stats,
-        "near_dedup_components": q_near_dedup_components,
-        "gopher_filter": q_gopher_filter,
-        "corpus_stats": q_corpus_stats,
-        "token_count_bpe": q_token_count_bpe,
-        "image_features": q_image_features,
-        "audio_features": q_audio_features,
-        "video_frames": q_video_frames,
-        "vocab_topk": q_vocab_topk,
-        "stratified_sample": q_stratified_sample,
-        "pack_manifest": q_pack_manifest,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "winnow_pairs": q_winnow_pairs,
-        "duplicated_spans": q_duplicated_spans,
-        "dedup_substrings": q_dedup_substrings,
-        "repetition": q_repetition,
     }
 
 

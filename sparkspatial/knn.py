@@ -19,14 +19,20 @@ sparse ones converge in ~2 rounds where doubling needed log2(need).
 
 The loop is DataFrame-native: queries, ring-cell expansion,
 certification, and the done/remaining split all stay distributed (no
-per-round toPandas of query state, no IN-list literals in the plan) —
-only one scalar stats row per round reaches the driver, so the
-operator survives query sets of 10^5+ rows. Round count is the serial
-bottleneck at cluster scale (each round is a job barrier), so the
-round body is a single eager localCheckpoint: rank, certification
-flag, and growth evidence all materialize in one pass (three window
-functions over one exchange), and the done/remaining split reads the
-checkpointed result.
+per-round toPandas of query state, no IN-list literals in the plan).
+Per round the driver reads one scalar stats row (query count, NULL-qid
+count, ring-row total) and one certified-query count that a
+DataFrame.observe carries out of the round's own checkpoint job, so
+the operator survives query sets of 10^5+ rows. Round count is the
+serial bottleneck (each round is a job barrier), so the round body is
+a single eager localCheckpoint: rank, certification flag, and growth
+evidence all materialize in one pass (three window functions over one
+exchange), and when the observed count says every remaining query
+certified, the loop exits with no further stats job or anti-join. A
+persisted KnnIndex knows its mean occupied-cell density, so queries
+start at the ring that density expects to certify k (not ring 1) and
+typical data finishes in that one round; the inline path starts at
+`initial_ring`.
 
 Coverage bounds are exact on the engine's sphere (R = 6371008.8 m,
 matching geom.haversine_deg): one degree of latitude is pi*R/180 m; the
@@ -40,7 +46,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from . import cells, geom
@@ -102,6 +108,12 @@ DENSITY_TARGET_K = 8.0
 # path can't know and stays conservative (probe on).
 DENSITY_PROBE_MIN_LOCS = 1_000_000
 
+# Ring sizing target: both the prebuilt-index start ring and the
+# per-query growth rule aim for a certified disc expected to hold
+# RING_TARGET_K * k points (>= k with margin, so a typical query
+# certifies in the round it is sized for).
+RING_TARGET_K = 4.0
+
 
 def _ring_cells(queries: DataFrame, res: int) -> DataFrame:
     """(qid, qlat, qlon, ring) -> one row per (query, k-ring cell).
@@ -132,12 +144,18 @@ def _ring_cells(queries: DataFrame, res: int) -> DataFrame:
                         cells.compose_cell_sql("_x", "_y", res) + " AS cell"))
 
 
-def _cover_m_col(ring, res: int):
-    """Guaranteed-covered radius (meters) of a searched k-ring as a
-    Column over (qlat, ring) — everything within this haversine
+def _dbl(x: float) -> str:
+    """A Python float as an exact Spark SQL DOUBLE literal (repr
+    round-trips, and the D suffix keeps it out of DECIMAL)."""
+    return f"{float(x)!r}D"
+
+
+def _cover_m_sql(res: int) -> str:
+    """Guaranteed-covered radius (meters) of a searched k-ring as a SQL
+    expression over (qlat, ring) — everything within this haversine
     distance of the query provably lies inside the ring window, so a
     k-th neighbor closer than it certifies the result exact. `ring` is
-    a Column (per-query adaptive radius).
+    per query (adaptive radius).
 
     lat direction: the window spans >= ring*cell_h degrees, and one
     degree of latitude is exactly pi*R/180 m on the sphere.
@@ -145,16 +163,41 @@ def _cover_m_col(ring, res: int):
     at |lat| <= phi_max is 2*R*asin(cos(phi_max)*sin(min(W,360)/2))
     (haversine >= cos(lat1)*cos(lat2)*sin^2(dlon/2) term).
     """
-    ring = ring.cast("double")
-    h_deg = ring * F.lit(180.0 / (1 << res))
-    w_deg = ring * F.lit(360.0 / (1 << res))
     r_m = geom.EARTH_RADIUS_M
-    cover_lat = F.radians(h_deg) * F.lit(r_m)
-    phi_max = F.least(F.abs(F.col("qlat")) + h_deg, F.lit(90.0))
-    half_w = F.least(F.radians(w_deg) / 2.0, F.lit(math.pi / 2.0))
-    cover_lon = (F.lit(2.0 * r_m)
-                 * F.asin(F.cos(F.radians(phi_max)) * F.sin(half_w)))
-    return F.least(cover_lat, cover_lon)
+    h_deg = f"(CAST(ring AS DOUBLE) * {_dbl(180.0 / (1 << res))})"
+    w_deg = f"(CAST(ring AS DOUBLE) * {_dbl(360.0 / (1 << res))})"
+    phi_max = f"least(abs(qlat) + {h_deg}, 90.0D)"
+    half_w = f"least(radians({w_deg}) / 2.0D, {_dbl(math.pi / 2.0)})"
+    return (f"least(radians({h_deg}) * {_dbl(r_m)}, "
+            f"{_dbl(2.0 * r_m)} "
+            f"* asin(cos(radians({phi_max})) * sin({half_w})))")
+
+
+def _cell_counts(loc: DataFrame) -> DataFrame:
+    """Per-cell point totals (c_pts) and location counts (n_loc) of a
+    location index — the density side table of the r6 prefilter (see
+    DENSITY_TARGET_K) and the source of the start-ring estimate.
+    Derived from loc, so it can never disagree with the candidate set;
+    ~|occupied cells| rows."""
+    return loc.groupBy("cell").agg(F.sum("n_pts").alias("c_pts"),
+                                   F.count(F.lit(1)).alias("n_loc"))
+
+
+def _density_ring(n_points: int, n_cells: int, k: int) -> int:
+    """Smallest ring whose certified disc should hold RING_TARGET_K * k
+    points at the mean occupied-cell density n_points / n_cells.
+
+    Below 60 degrees of latitude the covered radius is `ring` cell
+    heights (the latitude bound binds), and a cell is 2*cos(lat) cell
+    heights wide, so the disc spans pi*ring^2 / (2 cos lat) >=
+    pi*ring^2 / 2 cells. Heuristic only, like the growth rule:
+    certification re-checks exactly, so the choice moves the round
+    count, never an answer."""
+    if not n_cells or not n_points:
+        return 1
+    dens = n_points / n_cells
+    return max(1, math.ceil(math.sqrt(
+        2.0 * RING_TARGET_K * k / (math.pi * dens))))
 
 
 class KnnIndex:
@@ -193,25 +236,28 @@ class KnnIndex:
         self.point_id = point_id
         self.lat_col = lat_col
         self.lon_col = lon_col
-        # per-cell point totals — the density side table of the r6
-        # prefilter (see DENSITY_TARGET_K). Derived from loc, so it
-        # can never disagree with the candidate set; ~|occupied
-        # cells| rows (collapsed locations collapse further here).
-        self.cell_counts = (loc.groupBy("cell")
-                            .agg(F.sum("n_pts").alias("c_pts")))
-        # known after persist(); gates the density probe (see
-        # DENSITY_PROBE_MIN_LOCS) without costing a job
+        self.cell_counts = _cell_counts(loc)
+        # index shape, known after persist() at no extra job: n_loc
+        # gates the density probe (see DENSITY_PROBE_MIN_LOCS);
+        # n_points / n_cells is the mean occupied-cell density that
+        # picks knn_join's start ring (see _density_ring)
         self.n_loc: int | None = None
+        self.n_points: int | None = None
+        self.n_cells: int | None = None
 
     def persist(self) -> "KnnIndex":
         from . import session as _session
         self.loc = self.loc.persist()
-        self.n_loc = self.loc.count()
         _session.register_persisted(self.loc)
-        self.cell_counts = (self.loc.groupBy("cell")
-                            .agg(F.sum("n_pts").alias("c_pts")).persist())
-        self.cell_counts.count()
+        self.cell_counts = _cell_counts(self.loc).persist()
         _session.register_persisted(self.cell_counts)
+        # one job: scanning cell_counts builds both caches (loc's
+        # blocks materialize as the groupBy reads them) and returns
+        # the index shape
+        n_loc, n_points, n_cells = self.cell_counts.agg(
+            F.sum("n_loc"), F.sum("c_pts"), F.count(F.lit(1))).first()
+        self.n_loc, self.n_points, self.n_cells = \
+            int(n_loc or 0), int(n_points or 0), int(n_cells)
         return self
 
     def release(self) -> None:
@@ -257,17 +303,25 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, *,
     computing the top-k rank, the certification flag, and the
     ring-growth evidence together, materialized by a single eager
     localCheckpoint; the done/remaining split reads the checkpointed
-    frame. One scalar stats row per round (count + ring-row sum, for
-    loop exit and the broadcast decision) is the only driver-side
-    data. Uncertified queries grow their ring adaptively (see module
+    frame. Per round the driver sees one scalar stats row (count +
+    ring-row sum, for the NULL-qid check and the broadcast decision)
+    and one observed count of the queries the round certified, which
+    rides the checkpoint's own job; when every remaining query
+    certified the loop exits without another stats job or anti-join.
+    Uncertified queries grow their ring adaptively (see module
     docstring); certification is exact, so growth only affects round
     count.
 
     `index`: a prebuilt (usually persisted) KnnIndex over `points` —
     must match res/point_id/lat/lon and have k_max >= k. Without it
     the index builds inline (one extra shuffle over points per call).
+    A persisted index also knows its mean occupied-cell density, so
+    queries start at max(initial_ring, the ring that density certifies
+    for k; see _density_ring), capped at max_ring — on typical data one
+    round. The inline path starts at `initial_ring`.
     """
     spark = points.sparkSession
+    ring0 = int(initial_ring)
     if index is not None:
         if (index.res != res or index.point_id != point_id
                 or index.lat_col != lat_col or index.lon_col != lon_col):
@@ -282,6 +336,10 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, *,
         cell_counts = index.cell_counts
         use_probe = index.n_loc is None \
             or index.n_loc >= DENSITY_PROBE_MIN_LOCS
+        if index.n_cells is not None:
+            ring0 = max(ring0, min(
+                _density_ring(index.n_points, index.n_cells, k),
+                int(max_ring)))
     else:
         use_probe = True
         # lazy localCheckpoint: materializes inside round 1's window
@@ -290,19 +348,47 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, *,
         loc = (build_knn_index(points, res=res, k_max=k, point_id=point_id,
                                lat_col=lat_col, lon_col=lon_col)
                .loc.localCheckpoint(eager=False))
-        cell_counts = (loc.groupBy("cell")
-                       .agg(F.sum("n_pts").alias("c_pts")))
+        cell_counts = _cell_counts(loc)
 
     remaining = (queries.select(F.col(qid_col).cast("string").alias("qid"),
                                 F.col(qlat_col).cast("double").alias("qlat"),
                                 F.col(qlon_col).cast("double").alias("qlon"))
-                 .withColumn("ring", F.lit(int(initial_ring)).cast("int"))
+                 .withColumn("ring", F.lit(ring0).cast("int"))
                  # lazy like the in-loop checkpoints: round 1's stats
                  # job materializes it, saving one job per call
                  .localCheckpoint(eager=False))
 
+    # the round's plan is a few SQL projections because every
+    # DataFrame call is a driver round trip plus an analysis: built
+    # from Column objects, the same expressions take ~60 py4j calls
+    pid = f"`{point_id}`"
+    base_cov = f"{_cover_m_sql(res)} / {_dbl(PREFILTER_PHI)}"
+    if use_probe:
+        # density-shrunk radius (r6, see DENSITY_TARGET_K): the disc
+        # expected to hold DENSITY_TARGET_K * k points under the
+        # window's mean density, never beyond the covered radius
+        w_cells = "(CAST(ring AS DOUBLE) * 2.0D + 1.0D)"
+        h_m = (f"({w_cells} * {_dbl(180.0 / (1 << res))} "
+               f"* {_dbl(M_PER_DEG_LAT)})")
+        w_m = (f"({w_cells} * {_dbl(360.0 / (1 << res))} "
+               f"* {_dbl(M_PER_DEG_LAT)} "
+               f"* greatest(cos(radians(qlat)), {_dbl(1e-6)}))")
+        r_est = (f"sqrt({_dbl(DENSITY_TARGET_K * k)} * {h_m} * {w_m} "
+                 f"/ ({_dbl(math.pi)} * n_window))")
+        cov_eff = (f"CASE WHEN n_window > {_dbl(DENSITY_TARGET_K * k)} "
+                   f"THEN least({base_cov}, {r_est}) ELSE {base_cov} END")
+    else:
+        # small index: the probe's fixed broadcast cost exceeds its
+        # pruning benefit — keep the full covered disc (certification
+        # unchanged)
+        cov_eff = base_cov
+    dist = haversine_sql("qlat", "qlon", f"`{lat_col}`", f"`{lon_col}`")
+    growth = (f"least(greatest(2, ceil(sqrt({_dbl(RING_TARGET_K * k)} "
+              f"/ greatest(cand_n, 1)))), 8)")
+
     results: list[DataFrame] = []
     exhausted: list[DataFrame] = []
+    n_queries = n_certified = 0
     while True:
         # one tiny job: loop-exit count + exact ring-row total for the
         # broadcast decision (remaining is checkpointed or a shallow
@@ -311,53 +397,33 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, *,
         # key, so a NULL qid would merge queries in the top-k window
         # AND never leave `remaining` (null-unsafe anti-join) — reject
         # loudly instead of looping to max_ring and emitting dupes.
-        n_remaining, ring_rows, n_null = remaining.agg(
-            F.count(F.lit(1)),
-            F.sum((F.col("ring").cast("long") * 2 + 1)
-                  * (F.col("ring").cast("long") * 2 + 1)),
-            F.count(F.when(F.col("qid").isNull(), 1))).first()
+        n_remaining, ring_rows, n_null = remaining.selectExpr(
+            "count(1)",
+            "sum((CAST(ring AS BIGINT) * 2 + 1) "
+            "* (CAST(ring AS BIGINT) * 2 + 1))",
+            "count_if(qid IS NULL)").first()
         if n_null:
             raise ValueError(
                 f"knn_join: {n_null} query rows have NULL {qid_col!r} — "
                 "qid is the top-k key and must be non-null")
+        n_queries = n_queries or n_remaining
         if not n_remaining:
             break
         ring_df = _ring_cells(remaining, res)
-        # density probe (r6, see DENSITY_TARGET_K): expected point
-        # count of each query's window from the index's per-cell
-        # totals — one scan of the (persisted) cell_counts table with
-        # the tiny ring table broadcast as the build side; the
-        # per-query scalar then rides the ring rows into the
-        # candidate join
-        base_cov = _cover_m_col(F.col("ring"), res) / F.lit(PREFILTER_PHI)
         if use_probe:
+            # expected point count of each query's window from the
+            # index's per-cell totals — one scan of the (persisted)
+            # cell_counts table with the tiny ring table broadcast as
+            # the build side; the per-query scalar then rides the ring
+            # rows into the candidate join
             qdens = (F.broadcast(ring_df.select("qid", "cell"))
                      .join(cell_counts, "cell", "inner")
                      .groupBy("qid").agg(F.sum("c_pts").alias("n_window")))
-            w_cells = F.col("ring").cast("double") * 2.0 + 1.0
-            h_m = (w_cells * F.lit(180.0 / (1 << res))
-                   * F.lit(M_PER_DEG_LAT))
-            w_m = (w_cells * F.lit(360.0 / (1 << res))
-                   * F.lit(M_PER_DEG_LAT)
-                   * F.greatest(F.cos(F.radians(F.col("qlat"))),
-                                F.lit(1e-6)))
-            r_est = F.sqrt(F.lit(DENSITY_TARGET_K * k) * h_m * w_m
-                           / (F.lit(math.pi) * F.col("n_window")))
-            cov_eff = F.when(
-                F.col("n_window") > F.lit(DENSITY_TARGET_K * k),
-                F.least(base_cov, r_est)).otherwise(base_cov)
-            ring_df = (ring_df.join(F.broadcast(qdens), "qid", "left")
-                       .withColumn("_cov_eff", cov_eff)
-                       .drop("n_window"))
-        else:
-            # small index: the probe's fixed broadcast cost exceeds
-            # its pruning benefit — keep the full covered disc (plan
-            # identical to the unprobed one, certification unchanged)
-            ring_df = ring_df.withColumn("_cov_eff", base_cov)
+            ring_df = ring_df.join(F.broadcast(qdens), "qid", "left")
+        ring_df = ring_df.selectExpr("qid", "qlat", "qlon", "ring", "cell",
+                                     f"{cov_eff} AS _cov_eff")
         if ring_rows <= BROADCAST_MAX_RING_ROWS:
             ring_df = F.broadcast(ring_df)
-        dist = haversine_col(F.col("qlat"), F.col("qlon"),
-                             F.col(lat_col), F.col(lon_col))
         # candidate = (query, LOCATION) pair; dist computes once per
         # location, then the capped id list explodes to <= k rows —
         # all JVM, and the explode is what keeps a 10^4-point
@@ -368,40 +434,50 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, *,
         # the libm calls on the ~97% of hot-window rows outside the
         # effective disc
         cand = (loc.join(ring_df, on="cell", how="inner")
-                .where(F.abs(F.col(lat_col) - F.col("qlat"))
-                       * F.lit(M_PER_DEG_LAT_LB) <= F.col("_cov_eff"))
-                .withColumn("dist_m", dist)
-                .where(F.col("dist_m") <= F.col("_cov_eff"))
-                .select("qid", "ring", "n_pts", "dist_m",
-                        F.col("qlat"), "_cov_eff",
-                        F.posexplode(F.slice("top_ids", 1, k))
-                        .alias("_pos", point_id)))
+                .where(f"abs(`{lat_col}` - qlat) * {_dbl(M_PER_DEG_LAT_LB)}"
+                       " <= _cov_eff")
+                .selectExpr("qid", "ring", "n_pts", "_cov_eff", "top_ids",
+                            f"{dist} AS dist_m")
+                .where("dist_m <= _cov_eff")
+                .selectExpr("qid", "ring", "n_pts", "dist_m", "_cov_eff",
+                            f"posexplode(slice(top_ids, 1, {k})) "
+                            f"AS (_pos, {pid})"))
 
-        w_rank = Window.partitionBy("qid").orderBy(F.col("dist_m").asc(),
-                                                   F.col(point_id).asc())
-        w_all = Window.partitionBy("qid")
         # three windows, one exchange: rnk (sorted), cand_n (growth
         # evidence; each location counts its FULL population once, on
         # its _pos==0 row), kth (certification); then the exact
-        # certification flag. All materialize in ONE checkpoint.
-        kth = F.max(F.when(F.col("rnk") == k, F.col("dist_m"))).over(w_all)
+        # certification flag — certified against the SAME radius the
+        # filter used: kth < cov_eff <= cover proves every competitor
+        # was inside the window AND survived the filter. All
+        # materialize in ONE checkpoint, whose job also delivers the
+        # observed certified-query count (one rnk=1 row per qid).
+        certified = Observation()
         flagged = (cand
-                   .withColumn("rnk", F.row_number().over(w_rank))
-                   .withColumn("cand_n", F.sum(
-                       F.when(F.col("_pos") == 0, F.col("n_pts"))).over(w_all))
-                   .where(F.col("rnk") <= k)
-                   .withColumn("kth", kth)
-                   # certify against the SAME radius the filter used:
-                   # kth < cov_eff <= cover proves every competitor
-                   # was inside the window AND survived the filter
-                   .withColumn("ok", F.col("kth").isNotNull()
-                               & (F.col("kth") < F.col("_cov_eff")))
-                   .select("qid", point_id, "dist_m", "rnk", "ok",
-                           "cand_n", "ring")
+                   .selectExpr(
+                       "qid", pid, "dist_m", "ring", "_cov_eff",
+                       "row_number() OVER (PARTITION BY qid "
+                       f"ORDER BY dist_m, {pid}) AS rnk",
+                       "sum(CASE WHEN _pos = 0 THEN n_pts END) "
+                       "OVER (PARTITION BY qid) AS cand_n")
+                   .where(f"rnk <= {k}")
+                   .selectExpr(
+                       "qid", pid, "dist_m", "rnk", "cand_n", "ring",
+                       "_cov_eff",
+                       f"max(CASE WHEN rnk = {k} THEN dist_m END) "
+                       "OVER (PARTITION BY qid) AS kth")
+                   .selectExpr("qid", pid, "dist_m", "rnk",
+                               "kth IS NOT NULL AND kth < _cov_eff AS ok",
+                               "cand_n", "ring")
+                   .observe(certified,
+                            F.expr("count_if(ok AND rnk = 1)").alias("n"))
                    .localCheckpoint(eager=True))
+        n_ok = certified.get["n"]
+        n_certified += n_ok
 
         results.append(flagged.where("ok")
                        .select("qid", point_id, "dist_m", "rnk"))
+        if n_ok == n_remaining:
+            break
 
         # uncertified queries: keep zero-candidate ones (absent from
         # flagged) via left_anti against the certified qid set, join
@@ -413,41 +489,38 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, *,
         ev = flagged.where("NOT ok AND rnk = 1").select("qid", "cand_n")
         not_done = (remaining.join(done_q, "qid", "left_anti")
                     .join(ev, "qid", "left"))
-        exhausted.append(not_done.where(F.col("ring") >= max_ring)
+        exhausted.append(not_done.where(f"ring >= {int(max_ring)}")
                          .select("qid", "qlat", "qlon"))
 
-        # growth: enough ring to expect ~4k in-disc candidates under
-        # the observed density. cand_n counts points inside the
-        # certified disc, whose area scales with ring^2 exactly like
-        # the window's, so sqrt(4k/cand_n) is the right growth factor
-        # (the disc/window area ratio only biases it conservative —
-        # bigger jumps, never smaller). A kth-vs-cover margin term
-        # would be dead code here: the prefilter caps every observed
-        # dist at cover, so an uncertified query's kth is NULL (fewer
-        # than k in-disc survivors) or == cover. >=2x keeps the
+        # growth: enough ring to expect ~RING_TARGET_K*k in-disc
+        # candidates under the observed density. cand_n counts points
+        # inside the certified disc, whose area scales with ring^2
+        # exactly like the window's, so sqrt(4k/cand_n) is the right
+        # growth factor (the disc/window area ratio only biases it
+        # conservative — bigger jumps, never smaller). A kth-vs-cover
+        # margin term would be dead code here: the prefilter caps every
+        # observed dist at cover, so an uncertified query's kth is NULL
+        # (fewer than k in-disc survivors) or == cover. >=2x keeps the
         # doubling worst case, <=8x bounds one bad estimate.
         # Heuristic only — certification re-checks exactly next round.
-        g_density = F.ceil(F.sqrt(F.lit(4.0 * k)
-                                  / F.greatest(F.col("cand_n"), F.lit(1))))
-        growth = F.least(F.greatest(F.lit(2), g_density), F.lit(8))
-        # lazy localCheckpoint: materializes inside next round's stats
-        # job (no extra job here) and keeps lineage flat — without it
-        # the remaining-plan is an anti-join chain that deepens and
-        # re-evaluates every round (quadratic in round count on
-        # sparse data driving many rounds)
-        remaining = (not_done.where(F.col("ring") < max_ring)
-                     .withColumn("ring",
-                                 F.least(F.col("ring").cast("long") * growth,
-                                         F.lit(int(max_ring)))
-                                 .cast("int"))
-                     .select("qid", "qlat", "qlon", "ring")
+        # The lazy localCheckpoint materializes inside next round's
+        # stats job (no extra job here) and keeps lineage flat —
+        # without it the remaining-plan is an anti-join chain that
+        # deepens and re-evaluates every round (quadratic in round
+        # count on sparse data driving many rounds)
+        remaining = (not_done.where(f"ring < {int(max_ring)}")
+                     .selectExpr(
+                         "qid", "qlat", "qlon",
+                         f"CAST(least(CAST(ring AS BIGINT) * {growth}, "
+                         f"{int(max_ring)}) AS INT) AS ring")
                      .localCheckpoint(eager=False))
 
     # ring expansion exhausted (queries far from all data, or fewer
     # than k points exist): exact brute-force for those queries —
     # bounded, since only uncertified-at-max_ring queries reach here.
-    # One isEmpty probe total (not per round).
-    if exhausted:
+    # A query leaves the loop certified (counted) or exhausted, so
+    # when every query certified there is nothing to probe.
+    if exhausted and n_certified != n_queries:
         ex = exhausted[0]
         for e in exhausted[1:]:
             ex = ex.unionByName(e)
@@ -465,12 +538,14 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, *,
     return out
 
 
-def haversine_col(lat1, lon1, lat2, lon2):
-    """Haversine meters as a Column expression (shared by kNN/range)."""
-    return 2.0 * F.lit(geom.EARTH_RADIUS_M) * F.asin(F.sqrt(
-        F.pow(F.sin(F.radians(lat2 - lat1) / 2), 2)
-        + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2))
-        * F.pow(F.sin(F.radians(lon2 - lon1) / 2), 2)))
+def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
+    """Haversine meters as a SQL expression over four column names
+    (shared by kNN/range): one parse on the driver instead of a
+    Column-builder call per operator."""
+    return (f"{_dbl(2.0 * geom.EARTH_RADIUS_M)} * asin(sqrt("
+            f"pow(sin(radians({lat2} - {lat1}) / 2), 2) "
+            f"+ cos(radians({lat1})) * cos(radians({lat2})) "
+            f"* pow(sin(radians({lon2} - {lon1}) / 2), 2)))")
 
 
 def range_join(points: DataFrame, queries: DataFrame, radius_m: float, *,
@@ -620,9 +695,8 @@ def range_join(points: DataFrame, queries: DataFrame, radius_m: float, *,
     if broadcast:
         ring_df = F.broadcast(ring_df)
     cand = pts.join(ring_df, on="cell", how="inner")
-    dist = haversine_col(F.col("qlat"), F.col("qlon"),
-                         F.col(lat_col), F.col(lon_col))
-    return (cand.withColumn("dist_m", dist)
+    dist = haversine_sql("qlat", "qlon", f"`{lat_col}`", f"`{lon_col}`")
+    return (cand.withColumn("dist_m", F.expr(dist))
             .where(F.col("dist_m") <= radius_m)
             .select("qid", point_id, "dist_m"))
 

@@ -663,6 +663,94 @@ def test_knn_query_far_from_all_points(spark):
         ("p1", 1), ("p2", 2)]
 
 
+# res-8 cells are 1.40625 deg wide and 0.703125 deg tall; the lattice
+# block spans cells x in [130, 154), y in [140, 164)
+_LAT_RES, _LAT_NX, _LAT_NY, _LAT_X0, _LAT_Y0 = 8, 24, 24, 130, 140
+_CELL_W, _CELL_H = 360.0 / 256, 180.0 / 256
+
+
+def _lattice_point(x: float, y: float) -> tuple[float, float]:
+    """(lat, lon) of fractional res-8 grid coordinates."""
+    return -90.0 + y * _CELL_H, -180.0 + x * _CELL_W
+
+
+@pytest.fixture(scope="module")
+def knn_lattice(spark):
+    """A persisted KnnIndex over exactly two jittered points in each of
+    24 x 24 res-8 cells: mean occupied-cell density 2, so for k=8 the
+    density start ring is 4, where ring 1's certified disc holds only
+    ~3 points."""
+    from sparkspatial.knn import build_knn_index
+
+    rng = np.random.default_rng(11)
+    rows = []
+    for i in range(_LAT_NY):
+        for j in range(_LAT_NX):
+            for s, (fx, fy) in enumerate(((0.3, 0.3), (0.7, 0.7))):
+                lat, lon = _lattice_point(
+                    _LAT_X0 + j + fx + rng.uniform(-0.1, 0.1),
+                    _LAT_Y0 + i + fy + rng.uniform(-0.1, 0.1))
+                rows.append((f"p{i:02d}_{j:02d}_{s}", lat, lon))
+    pts = spark.createDataFrame(
+        rows, "url string, lat double, lon double").persist()
+    idx = build_knn_index(pts, res=_LAT_RES, k_max=8).persist()
+    # interior queries: at least 6 cells from every edge of the block
+    inner = [(f"in{n}",) + _lattice_point(
+        _LAT_X0 + 6 + rng.uniform(0, _LAT_NX - 12),
+        _LAT_Y0 + 6 + rng.uniform(0, _LAT_NY - 12)) for n in range(12)]
+    yield pts, idx, inner
+    idx.release()
+    pts.unpersist()
+
+
+def _knn_rows(df):
+    return {(r.qid, r.rnk): (r.url, r.dist_m) for r in df.collect()}
+
+
+def test_knn_index_density_start_ring_one_round(spark, knn_lattice):
+    """On a prebuilt index whose mean density calls for ring 4, every
+    interior query certifies in the first round: the call, including
+    collecting its output, runs at most 8 Spark jobs (starting at ring
+    1 takes a second round and about twice the jobs) and equals brute
+    force."""
+    from sparkspatial.knn import _density_ring
+
+    pts, idx, inner = knn_lattice
+    assert (idx.n_points, idx.n_cells) == (2 * _LAT_NX * _LAT_NY,
+                                           _LAT_NX * _LAT_NY)
+    assert _density_ring(idx.n_points, idx.n_cells, 8) == 4
+    q = spark.createDataFrame(inner, "qid string, qlat double, qlon double")
+    want = _knn_rows(knn_bruteforce(pts, q, k=8))
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-one-round", "knn density start ring")
+    try:
+        got = _knn_rows(knn_join(pts, q, k=8, res=_LAT_RES, index=idx))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("knn-one-round"))
+    assert got == want
+    assert n_jobs <= 8, n_jobs
+
+
+def test_knn_index_mixed_rounds_and_fallback(spark, knn_lattice):
+    """Index path with queries that leave the loop three ways: interior
+    ones certify in round 1, one 5 cells south of the block has an
+    empty first disc and certifies after growth, and one far from all
+    data exhausts max_ring and takes the brute-force fallback. Pins the
+    observed-count exit and the certified/exhausted accounting."""
+    pts, idx, inner = knn_lattice
+    grow = ("grow",) + _lattice_point(_LAT_X0 + 12.5, _LAT_Y0 - 5.0)
+    far = ("far", -60.0, -150.0)
+    q = spark.createDataFrame(inner[:4] + [grow, far],
+                              "qid string, qlat double, qlon double")
+    got = _knn_rows(knn_join(pts, q, k=8, res=_LAT_RES, index=idx,
+                             max_ring=12))
+    want = _knn_rows(knn_bruteforce(pts, q, k=8))
+    assert got == want
+    assert {qid for qid, _ in got} == {r[0] for r in inner[:4]} | {
+        "grow", "far"}
+
+
 def test_range_join_matches_bruteforce(spark, points_df):
     from sparkspatial.knn import range_join
     from sparkspatial.geom import haversine_deg
