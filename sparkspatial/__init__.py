@@ -22,7 +22,6 @@ PySpark DataFrame operators over web-scale page corpora:
 - real multimodal codecs (PPM / WAV / Y4M) + features         -> multimodal
 - temporal as-of join                                         -> temporal
 - bucketed/partitioned storage layouts (shuffle-free joins)   -> bucketing
-- Structured Streaming twins of the batch operators           -> streaming
 - per-partition lineage + resumable checkpoints               -> checkpoint
 
 Pure Python, `spark-submit --py-files`-shippable: no JARs, no native

@@ -50,8 +50,7 @@ __all__ = ["connected_components", "connected_components_star",
 
 def connected_components(edges: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b",
-                         max_iter: int = 25,
-                         fallback_star: bool = True) -> DataFrame:
+                         max_iter: int = 25) -> DataFrame:
     """(node, component) for every node appearing in `edges`;
     component = min node id in the node's connected component.
 
@@ -65,9 +64,8 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
     are contracted through the current labels first, so star
     contraction runs on the quotient graph (one node per current
     label cluster) and the result composes back through the label
-    table. Set `fallback_star=False` to get the old RuntimeError at
-    exhaustion instead (stagnation never raises — it only picks the
-    faster plan).
+    table. Either trigger only picks the plan: the result is exact
+    and the call never raises on a long diameter.
     """
     sym = (edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
            .unionByName(
@@ -104,7 +102,7 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
                                  F.col("lbl").alias("component"))
         deltas.append(prev_sum - new_sum)
         prev_sum = new_sum
-        if fallback_star and len(deltas) >= 4 and deltas[-1] > 0 \
+        if len(deltas) >= 4 and deltas[-1] > 0 \
                 and deltas[-1] * 5 >= deltas[-4] * 4:
             # stagnating trend: the label-sum delta decayed < 20% over
             # three rounds — chains/paths shed one hop per round
@@ -112,34 +110,30 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
             # collapses geometrically. Switch plans now; the fallback
             # is exact either way, so firing early only changes cost.
             break
-    if fallback_star:
-        # contract edges through the completed rounds' labels: star
-        # contraction then runs on the quotient graph instead of
-        # restarting from the raw edge set
-        la = labels.select(F.col("node").alias("src"),
-                           F.col("lbl").alias("_la"))
-        lb = labels.select(F.col("node").alias("dst"),
-                           F.col("lbl").alias("_lb"))
-        reduced = (sym.join(la, "src").join(lb, "dst")
-                   .where(F.col("_la") != F.col("_lb"))
-                   .select(F.col("_la").alias(id_a),
-                           F.col("_lb").alias(id_b))
-                   .distinct()
-                   .localCheckpoint())
-        sym.unpersist()
-        if reduced.isEmpty():
-            # every cluster already carries a single label
-            return labels.select(F.col("node"),
-                                 F.col("lbl").alias("component"))
-        roots = connected_components_star(reduced, id_a, id_b)
-        return (labels
-                .join(roots.withColumnRenamed("node", "lbl"),
-                      "lbl", "left")
-                .select(F.col("node"),
-                        F.coalesce("component", "lbl").alias("component")))
+    # contract edges through the completed rounds' labels: star
+    # contraction then runs on the quotient graph instead of
+    # restarting from the raw edge set
+    la = labels.select(F.col("node").alias("src"),
+                       F.col("lbl").alias("_la"))
+    lb = labels.select(F.col("node").alias("dst"),
+                       F.col("lbl").alias("_lb"))
+    reduced = (sym.join(la, "src").join(lb, "dst")
+               .where(F.col("_la") != F.col("_lb"))
+               .select(F.col("_la").alias(id_a),
+                       F.col("_lb").alias(id_b))
+               .distinct()
+               .localCheckpoint())
     sym.unpersist()
-    raise RuntimeError(
-        f"connected_components: no convergence in {max_iter} rounds")
+    if reduced.isEmpty():
+        # every cluster already carries a single label
+        return labels.select(F.col("node"),
+                             F.col("lbl").alias("component"))
+    roots = connected_components_star(reduced, id_a, id_b)
+    return (labels
+            .join(roots.withColumnRenamed("node", "lbl"),
+                  "lbl", "left")
+            .select(F.col("node"),
+                    F.coalesce("component", "lbl").alias("component")))
 
 
 def components_duckdb_sql(edges_cte: str, id_a: str = "id_a",

@@ -48,7 +48,7 @@ BROADCAST_MAX_COVER_ROWS = 2_000_000
 # land on 1e-5 digits in {9,1} (x) / {3,7} (y) while zone vertices end
 # at 1e-5 digit 0 — no coordinate coincidence, every predicate
 # strict-sign-decidable identically across engines. The ONE source for
-# entry queries, streaming, and the pipeline CLI.
+# entry queries and the pipeline CLI.
 RECT_HALF_W_DEG = 2.1e-4
 RECT_HALF_H_DEG = 1.7e-4
 
@@ -68,8 +68,8 @@ def rect_probes_from_points(points: DataFrame, *,
                             half_h: float = RECT_HALF_H_DEG) -> DataFrame:
     """Codegen bbox quads around points — the probe frame for
     spatial_join_polygons(probe_rect=True). Shared by the driver
-    query, the streaming overlay, and the pipeline CLI so the quad
-    construction can never diverge between them."""
+    query and the pipeline CLI so the quad construction can never
+    diverge between them."""
     return points.selectExpr(
         id_col,
         f"{lon_col} - {double_lit(half_w)} AS minx",
@@ -340,7 +340,6 @@ def spatial_join(points: DataFrame, polys: DataFrame, *,
                  hot_threshold: int = skew.DEFAULT_HOT_THRESHOLD,
                  hot_relative: bool = True,
                  keep_poly_cols: list[str] | None = None,
-                 single_res: bool = True,
                  index: ZoneIndex | None = None) -> DataFrame:
     """Point-in-polygon spatial join (J5/J6 of SURVEY.md §2.3).
 
@@ -376,10 +375,7 @@ def spatial_join(points: DataFrame, polys: DataFrame, *,
             raise ValueError(
                 f"index built for refine={index.refine!r}, got {refine!r}")
         cover, res, n_cover = index.cover, index.res, index.n_cover
-        res_list = [res]
-        if broadcast is None:
-            broadcast = n_cover <= BROADCAST_MAX_COVER_ROWS
-    elif single_res:
+    else:
         # one bounded stats pass over the (small) polygon side picks the
         # global resolution and sizes the cover; the exploded cover
         # itself is then built lazily inside the join plan and never
@@ -390,28 +386,20 @@ def spatial_join(points: DataFrame, polys: DataFrame, *,
                                res=res,
                                max_cells_per_poly=max_cells_per_poly,
                                with_edges=(refine == "jvm"))
-        res_list = [res]
-        if broadcast is None:
-            broadcast = n_cover <= BROADCAST_MAX_COVER_ROWS
-    else:
-        # mixed-resolution path: the cover is consumed twice (stats +
-        # join), persist for the duration of this call's actions; the
-        # caller can release via session.unpersist_all()
-        from . import session as _session
-        cover = cover_polygons(polys, poly_id=poly_id, wkb_col=wkb_col,
-                               res=res,
-                               max_cells_per_poly=max_cells_per_poly,
-                               with_edges=(refine == "jvm")).persist()
-        _session.register_persisted(cover)
-        stats = cover.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(F.shiftright(F.col("cell"), 58))
-            .alias("res_set")).collect()[0]
-        res_list = [int(r) for r in stats.res_set] or [res]
-        if broadcast is None:
-            broadcast = stats.n <= BROADCAST_MAX_COVER_ROWS
+    if broadcast is None:
+        broadcast = n_cover <= BROADCAST_MAX_COVER_ROWS
 
-    pts = point_cells(points, res_list, lat_col=lat_col, lon_col=lon_col)
+    # Spark canonicalizes lambda variables to expression ids 1, 2, ...
+    # and filter inference reads that canonical form. When the points'
+    # lat/lon carry such small ids (a frame built first in its JVM),
+    # the PIP fold below looks cover-only, and the optimizer copies it
+    # onto the cover side, where it cannot bind
+    # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND). Renamed coordinates get
+    # fresh ids; the matched rows get the caller's names back.
+    plat, plon = "_sj_lat", "_sj_lon"
+    inner = {lat_col: plat, lon_col: plon}
+    pts = point_cells(points.withColumnsRenamed(inner), [res],
+                      lat_col=plat, lon_col=plon)
 
     join_keys = ["cell"]
     if salt and not broadcast:
@@ -438,7 +426,8 @@ def spatial_join(points: DataFrame, polys: DataFrame, *,
         # pure overhead exactly when there is no skew to fix (guide
         # §2.5: salt hot keys, not every key)
         if not plan.isEmpty():
-            pts = skew.salt_points(pts, plan, id_cols=point_id_cols)
+            pts = skew.salt_points(
+                pts, plan, id_cols=[inner.get(c, c) for c in point_id_cols])
             cover = skew.salt_cover(cover, plan)
             join_keys = ["cell", "salt"]
 
@@ -447,19 +436,21 @@ def spatial_join(points: DataFrame, polys: DataFrame, *,
 
     # JVM-side envelope prefilter before anything reaches Python
     coarse = coarse.where(
-        (F.col(lon_col) >= F.col("minx")) & (F.col(lon_col) <= F.col("maxx"))
-        & (F.col(lat_col) >= F.col("miny")) & (F.col(lat_col) <= F.col("maxy")))
+        (F.col(plon) >= F.col("minx")) & (F.col(plon) <= F.col("maxx"))
+        & (F.col(plat) >= F.col("miny")) & (F.col(plat) <= F.col("maxy")))
 
     point_cols = [c for c in points.columns]
     keep = point_cols + [c for c in keep_poly_cols if c not in point_cols]
+    keep_inner = [inner.get(c, c) for c in keep]
 
     if refine == "bbox":
-        matched = coarse.select(*keep)
+        matched = coarse.select(*keep_inner)
     elif refine == "jvm":
-        matched = (coarse.where(pip_jvm_predicate(lat_col, lon_col))
-                   .select(*keep))
+        matched = (coarse.where(pip_jvm_predicate(plat, plon))
+                   .select(*keep_inner))
     else:
-        matched = _refine_exact(coarse, lat_col, lon_col, keep, poly_id)
+        matched = _refine_exact(coarse, plat, plon, keep_inner, poly_id)
+    matched = matched.withColumnsRenamed({plat: lat_col, plon: lon_col})
 
     # a point matches a polygon in exactly one cover cell (single res
     # per polygon), so no pair-dedup is needed on the inner path
@@ -486,8 +477,7 @@ def build_poly_zone_index(polys: DataFrame, poly_id: str = "zone_id",
                           ) -> ZoneIndex:
     """Prebuilt zone-side state for spatial_join_polygons (cover
     WITHOUT edge arrays — the polygonal refine decodes WKB): the
-    build-once analog of build_zone_index, and the required form for
-    STREAMING probes (a streaming query cannot run the stats pass)."""
+    build-once analog of build_zone_index."""
     r, n_cover = cover_stats(polys, poly_id, wkb_col, res,
                              max_cells_per_poly)
     cover = cover_polygons(polys, poly_id=poly_id, wkb_col=wkb_col,
@@ -550,10 +540,7 @@ def spatial_join_polygons(probes: DataFrame, zones: DataFrame | None = None,
     cover replication is bounded by the probe bbox size at r.
 
     Pass `index=build_poly_zone_index(zones)` to reuse the zone-side
-    state across calls — and REQUIRED when `probes` is a STREAMING
-    DataFrame (with probe_rect/probe_bbox_cols every probe-side step
-    is stateless, so the whole join is stream-static legal; the stats
-    pass is not).
+    state (cover and its stats pass) across calls.
     """
     if index is not None:
         if zones is not None:

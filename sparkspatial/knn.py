@@ -32,7 +32,7 @@ certified, the loop exits with no further stats job or anti-join. A
 persisted KnnIndex knows its mean occupied-cell density, so queries
 start at the ring that density expects to certify k (not ring 1) and
 typical data finishes in that one round; the inline path starts at
-`initial_ring`.
+ring 1.
 
 Coverage bounds are exact on the engine's sphere (R = 6371008.8 m,
 matching geom.haversine_deg): one degree of latitude is pi*R/180 m; the
@@ -294,7 +294,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, *,
              lat_col: str = "lat", lon_col: str = "lon",
              qid_col: str = "qid", qlat_col: str = "qlat",
              qlon_col: str = "qlon",
-             initial_ring: int = 1, max_ring: int = 64,
+             max_ring: int = 64,
              index: KnnIndex | None = None) -> DataFrame:
     """Exact kNN: returns (qid, point_id, dist_m, rnk) with rnk 1..k.
 
@@ -316,12 +316,12 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, *,
     must match res/point_id/lat/lon and have k_max >= k. Without it
     the index builds inline (one extra shuffle over points per call).
     A persisted index also knows its mean occupied-cell density, so
-    queries start at max(initial_ring, the ring that density certifies
-    for k; see _density_ring), capped at max_ring — on typical data one
-    round. The inline path starts at `initial_ring`.
+    queries start at max(1, the ring that density certifies for k; see
+    _density_ring), capped at max_ring — on typical data one round.
+    The inline path starts at ring 1.
     """
     spark = points.sparkSession
-    ring0 = int(initial_ring)
+    ring0 = 1
     if index is not None:
         if (index.res != res or index.point_id != point_id
                 or index.lat_col != lat_col or index.lon_col != lon_col):

@@ -7,8 +7,8 @@ import os
 from pyspark.sql import SparkSession
 
 
-# DataFrames persisted by engine internals (e.g. the mixed-resolution
-# spatial-join cover) register here so long-lived sessions can release
+# DataFrames persisted by engine internals (e.g. the LSH band table of
+# text.lsh_candidate_pairs) register here so long-lived sessions can release
 # executor memory between jobs without tracking them by hand.
 _PERSISTED: list = []
 

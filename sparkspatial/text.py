@@ -468,11 +468,9 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
 
 
 def band_keys(sigs: DataFrame, id_col: str = "doc_id",
-              bands: int = 4, keep_cols: tuple = ()) -> DataFrame:
-    """(id[, keep_cols...], band, bh) LSH band keys from a signature
-    matrix — the shared substrate of batch candidate pairing and
-    streaming near-dup alerts (band hashing is JVM xxhash64 over
-    signature chunks, stateless, so it is legal on a stream)."""
+              bands: int = 4) -> DataFrame:
+    """(id, band, bh) LSH band keys from a signature matrix: JVM
+    xxhash64 over each band's chunk of signature columns."""
     mh_cols = [c for c in sigs.columns if c.startswith("mh")]
     rows_per_band = len(mh_cols) // bands
     band_exprs = []
@@ -481,9 +479,8 @@ def band_keys(sigs: DataFrame, id_col: str = "doc_id",
         band_exprs.append(
             F.struct(F.lit(b).alias("band"),
                      F.xxhash64(*[F.col(c) for c in chunk]).alias("bh")))
-    carry = [id_col, *keep_cols]
-    return (sigs.select(*carry, F.explode(F.array(*band_exprs)).alias("e"))
-            .select(*carry, "e.band", "e.bh"))
+    return (sigs.select(id_col, F.explode(F.array(*band_exprs)).alias("e"))
+            .select(id_col, "e.band", "e.bh"))
 
 
 def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
@@ -1149,17 +1146,16 @@ def token_count_bpe_sql(col: str, dialect: str = "spark") -> str:
     return f"{f}({bpe_tokens_sql(col, dialect)})"
 
 
-# ---------------------------------------------- streaming-safe signatures
+# ---------------------------------------- numpy reference signatures
 
 def minhash_pandas(texts, n_hashes: int = 16, shingle_k: int = 3):
     """Per-row MinHash signatures in numpy — bit-identical to
     :func:`minhash_signatures` (same norm, token h32, rolling shingle
     combine, affine permutations mod M31).
 
-    Exists for STREAMING: the batch path's window-lead shingle rolling
-    is illegal on an unbounded stream (non-time window), so streams
-    compute signatures row-local inside an Arrow batch instead. Both
-    paths are pinned equal in tests.
+    The independent reference that pins the batch path: tests compare
+    the two bit for bit, on the corpus and on hostile whitespace
+    (\\x0B, NBSP, tabs) where Java and Python regex classes differ.
 
     Returns an (len(texts), n_hashes) int64 ndarray.
     """

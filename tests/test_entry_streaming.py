@@ -1,14 +1,10 @@
-"""Driver-contract smoke + streaming extension tests."""
+"""Driver-contract smoke tests: entry() and queries() vs oracle_sql()."""
 
 from __future__ import annotations
 
 import duckdb
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from sparkspatial import fixtures, streaming
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -40,353 +36,3 @@ def test_queries_have_oracles_and_run(spark, sf_dir):
         a = sorted(map(tuple, spdf[sc].astype(str).values.tolist()))
         b = sorted(map(tuple, opdf[oc].astype(str).values.tolist()))
         assert a == b, name
-
-
-def test_streaming_sessionize(spark, tmp_path, sf_dir):
-    """session_window streaming sessionization: every emitted (closed)
-    session must exactly match a batch window-lag session; append mode
-    keeps trailing sessions open, so emitted is a strict subset."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
-        .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
-    path = str(tmp_path / "events_stream")
-    ev.repartition(8).write.mode("overwrite").parquet(path)
-
-    # one micro-batch for all files: parquet listing order is not
-    # time-ordered, so per-file triggers would drop "late" events at
-    # the watermark and fragment sessions; the trailing no-data batch
-    # then advances the watermark and flushes closed sessions
-    stream = (spark.readStream.schema("user_id long, ts timestamp")
-              .parquet(path))
-    agg = streaming.streaming_sessionize(stream, gap_seconds=1800,
-                                         watermark="1 second")
-    q = (agg.writeStream.outputMode("append")
-         .format("memory").queryName("t_sessions").start())
-    q.processAllAvailable()
-    q.stop()
-    got = {(r.user_id, int(r.session_start.timestamp())): r.n_events
-           for r in spark.sql("SELECT * FROM t_sessions").collect()}
-
-    # batch truth: sessions per user (window lag + cumsum)
-    from pyspark.sql import Window
-    w = Window.partitionBy("user_id").orderBy("ts")
-    epoch = F.col("ts").cast("long")
-    batch = (ev.withColumn("new_s", F.when(
-        epoch - F.lag(epoch).over(w) > 1800, 1).otherwise(0))
-        .withColumn("sess", F.sum("new_s").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy("user_id", "sess")
-        .agg(F.min(epoch).alias("session_start"),
-             F.count(F.lit(1)).alias("n_events")))
-    want = {(r.user_id, r.session_start): r.n_events
-            for r in batch.collect()}
-    assert len(got) > 0
-    # every emitted session matches the batch truth exactly
-    for key, n in got.items():
-        assert want.get(key) == n, key
-    # and most sessions closed by end of stream
-    assert len(got) >= len(want) * 0.5
-
-
-def test_streaming_grid_counts(spark, tmp_path):
-    pages = fixtures.synthetic_pages(spark, n=400, n_domains=20)
-    path = str(tmp_path / "pages_stream")
-    pages.write.mode("overwrite").parquet(path)
-
-    stream = streaming.read_pages_stream(spark, path)
-    assert stream.isStreaming
-    agg = streaming.streaming_grid_counts(stream, res=6, window="1 hour")
-    name = streaming.run_to_memory(agg, "t_stream_out")
-    got = spark.sql(f"SELECT * FROM {name}")
-    total = got.agg(F.sum("page_count")).first()[0]
-    assert total == 400  # every page lands in exactly one (window, cell)
-    assert got.where(F.col("cell").isNull()).count() == 0
-
-    # streaming result == batch result on the same data (Kappa property)
-    from sparkspatial import cells, extract
-    batch = extract.geotag(spark.read.parquet(path), "domain", "url")
-    batch = batch.withColumn("cell",
-                             F.expr(cells.cell_sql("lat", "lon", 6)))
-    want = {(r.cell,): r.n for r in
-            batch.groupBy("cell").agg(F.count("*").alias("n")).collect()}
-    got_cells = {(r.cell,): r.page_count for r in
-                 got.groupBy("cell").agg(
-                     F.sum("page_count").alias("page_count"))
-                 .withColumnRenamed("sum(page_count)", "page_count")
-                 .collect()}
-    assert got_cells == want
-
-
-def test_streaming_spatial_join_equals_batch(spark, tmp_path):
-    """Stream-static spatial join via a prebuilt ZoneIndex: streamed
-    (zone, count) totals == the batch spatial join on the same pages
-    (one code path, Kappa property)."""
-    from sparkspatial import extract, join, zones
-
-    pages = fixtures.synthetic_pages(spark, n=500, n_domains=25)
-    path = str(tmp_path / "pages_sj_stream")
-    pages.write.mode("overwrite").parquet(path)
-
-    zdf = zones.synthetic_zones(spark, n=24).persist()
-    zidx = join.build_zone_index(zdf, res=10).persist()
-    try:
-        stream = streaming.read_pages_stream(spark, path)
-        agg = streaming.streaming_zone_counts(stream, zidx,
-                                              window="24 hours")
-        name = streaming.run_to_memory(agg, "t_sj_out")
-        got = {r.zone_id: r.page_count for r in
-               spark.sql(f"SELECT zone_id, SUM(page_count) AS page_count "
-                         f"FROM {name} GROUP BY zone_id").collect()}
-
-        batch_pts = extract.geotag(spark.read.parquet(path),
-                                   "domain", "url")
-        batch = join.spatial_join(batch_pts, zdf, how="inner",
-                                  broadcast=True, index=zidx)
-        want = {r.zone_id: r.n for r in
-                batch.groupBy("zone_id").agg(
-                    F.count(F.lit(1)).alias("n")).collect()}
-        assert got == want and len(want) > 0
-    finally:
-        zidx.release()
-        zdf.unpersist()
-
-
-def test_streaming_building_overlay_equals_batch(spark, tmp_path):
-    """Stream-static POLYGON x polygon overlay via a prebuilt
-    poly-zone index: streamed (url, zone_id) pair set == the batch
-    spatial_join_polygons on the same pages — the round-3 operator is
-    Kappa-compatible end-to-end (every probe-side step stateless)."""
-    from sparkspatial import join
-
-    pages = fixtures.synthetic_pages(spark, n=400, n_domains=20)
-    path = str(tmp_path / "pages_bo_stream")
-    pages.write.mode("overwrite").parquet(path)
-
-    zdf = entrymod._poly_zones_df(spark).persist()
-    pidx = join.build_poly_zone_index(zdf).persist()
-    try:
-        stream = streaming.read_pages_stream(spark, path)
-        matched = streaming.streaming_building_overlay(stream, pidx)
-        name = streaming.run_to_memory(matched, "t_bo_out",
-                                       output_mode="append")
-        got = {(r.url, r.zone_id) for r in
-               spark.sql(f"SELECT url, zone_id FROM {name}").collect()}
-
-        # batch side built INDEPENDENTLY of the streaming wrapper
-        # (geotag + quads + the batch operator directly), so a wrapper
-        # bug cannot cancel out of the comparison
-        from sparkspatial import extract
-
-        batch_pts = extract.geotag(spark.read.parquet(path),
-                                   "domain", "url")
-        quads = join.rect_probes_from_points(batch_pts)
-        batch = join.spatial_join_polygons(quads, probe_id="url",
-                                           probe_rect=True, index=pidx)
-        want = {(r.url, r.zone_id) for r in batch.collect()}
-        assert got == want and len(want) > 0
-    finally:
-        pidx.release()
-        zdf.unpersist()
-
-
-def test_streaming_knn_equals_batch(spark, tmp_path):
-    """Streaming exact kNN (foreachBatch over the batch operator with
-    a prebuilt KnnIndex): union of per-micro-batch results == the
-    batch knn_join over all queries (kNN is per-query independent, so
-    batch slicing cannot change any result)."""
-    from sparkspatial import extract, knn
-
-    pages = fixtures.synthetic_pages(spark, n=400, n_domains=20)
-    pts = extract.geotag(pages.select("url", "domain", "lang"),
-                         "domain", "url").persist()
-    # query stream: several parquet files -> several micro-batches
-    queries = (pts.where("xxhash64(url) % 10 = 0")
-               .selectExpr("url AS qid", "lat AS qlat", "lon AS qlon"))
-    qpath = str(tmp_path / "knn_queries_stream")
-    queries.repartition(4).write.mode("overwrite").parquet(qpath)
-
-    kidx = knn.build_knn_index(pts, res=8, k_max=8).persist()
-    try:
-        qstream = (spark.readStream
-                   .schema("qid string, qlat double, qlon double")
-                   .option("maxFilesPerTrigger", 1).parquet(qpath))
-        got = {}
-
-        def sink(df, epoch_id):
-            for r in df.collect():
-                assert (r.qid, r.rnk) not in got  # no cross-batch dupes
-                got[(r.qid, r.rnk)] = (r.url, round(r.dist_m, 6))
-
-        q = (streaming.streaming_knn(qstream, pts, 3, index=kidx,
-                                     res=8, sink=sink)
-             .option("checkpointLocation", str(tmp_path / "knn_ckpt"))
-             .start())
-        q.processAllAvailable()
-        q.stop()
-
-        batch = knn.knn_join(pts, spark.read.parquet(qpath), 3,
-                             res=8, index=kidx)
-        want = {(r.qid, r.rnk): (r.url, round(r.dist_m, 6))
-                for r in batch.collect()}
-        assert got == want and len(want) > 0
-    finally:
-        kidx.release()
-        pts.unpersist()
-
-
-def test_streaming_cosine_topk_equals_batch(spark, tmp_path):
-    """Streaming exact cosine top-k (foreachBatch over
-    cosine_topk_blocked against a static persisted corpus): union of
-    per-micro-batch results == the batch operator over all queries
-    (top-k is per-query independent, so batch slicing cannot change
-    any result), with no cross-batch duplicates."""
-    from sparkspatial import sim
-
-    rng = np.random.default_rng(7)
-    corpus = spark.createDataFrame(
-        [(int(i), [float(x) for x in rng.normal(size=8)])
-         for i in range(60)],
-        "vec_id long, embedding array<double>").persist()
-    queries = spark.createDataFrame(
-        [(int(100 + i), [float(x) for x in rng.normal(size=8)])
-         for i in range(12)],
-        "qid long, qvec array<double>")
-    qpath = str(tmp_path / "topk_queries_stream")
-    queries.repartition(4).write.mode("overwrite").parquet(qpath)
-    q = None
-    try:
-        qstream = (spark.readStream
-                   .schema("qid long, qvec array<double>")
-                   .option("maxFilesPerTrigger", 1).parquet(qpath))
-        got = {}
-
-        def sink(df, epoch_id):
-            for r in df.collect():
-                assert (r.qid, r.rnk) not in got  # no cross-batch dupes
-                got[(r.qid, r.rnk)] = (r.vec_id, round(r.cos, 9))
-
-        q = (streaming.streaming_cosine_topk(
-                qstream, corpus, 4, q_blocks=2, c_blocks=3, sink=sink)
-             .option("checkpointLocation", str(tmp_path / "topk_ckpt"))
-             .start())
-        q.processAllAvailable()
-
-        batch = sim.cosine_topk_blocked(
-            corpus, spark.read.parquet(qpath), 4,
-            q_blocks=2, c_blocks=3)
-        want = {(r.qid, r.rnk): (r.vec_id, round(r.cos, 9))
-                for r in batch.collect()}
-        assert got == want and len(want) == 12 * 4
-    finally:
-        if q is not None:
-            q.stop()
-        corpus.unpersist()
-
-
-def test_streaming_nearest_zone_inline(spark, tmp_path):
-    """nearest_zone runs INLINE in a streaming query — unlike kNN or
-    top-k re-ranks it is a stateless codegen projection (no window,
-    no loop), so the operator composes into readStream->writeStream
-    directly with no foreachBatch wrapper. Stream == batch pinned."""
-    from sparkspatial.join import nearest_zone
-
-    rects = [("za", -74.5, 40.0, -73.5, 41.0),
-             ("zb", 99.5, -11.0, 100.5, -9.0)]
-    rows = [(f"u{i}", float(i % 7) * 10.0 - 30.0,
-             float(i % 11) * 20.0 - 100.0) for i in range(40)]
-    src = str(tmp_path / "nz_stream_src")
-    batch_pts = spark.createDataFrame(
-        rows, "url string, lat double, lon double")
-    batch_pts.repartition(3).write.parquet(src)
-    q = None
-    try:
-        stream = (spark.readStream
-                  .schema("url string, lat double, lon double")
-                  .option("maxFilesPerTrigger", 1).parquet(src))
-        got = []
-        q = (nearest_zone(stream, rects)
-             .writeStream.foreachBatch(
-                 lambda b, e: got.extend(
-                     (r.url, r.zone_id, r.dist_deg2) for r in b.collect()))
-             .option("checkpointLocation", str(tmp_path / "nz_ckpt"))
-             .start())
-        q.processAllAvailable()
-        want = {(r.url, r.zone_id, r.dist_deg2)
-                for r in nearest_zone(batch_pts, rects).collect()}
-        assert set(got) == want and len(got) == 40
-    finally:
-        if q is not None:
-            q.stop()
-
-
-def test_transform_with_state_boundary(spark, tmp_path):
-    """transformWithStateInPandas is the documented custom-state path
-    (OPERATORS.md §2.10), but its streaming Python runner imports
-    google.protobuf, which this container lacks — so the boundary is
-    pinned here: the test SKIPS while protobuf is absent and runs the
-    per-key running-count processor for real the day it appears (so
-    the doc claim can never silently rot in either direction)."""
-    import pytest
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithStateInPandas unavailable: the "
-                    "streaming python runner needs google.protobuf "
-                    "(documented boundary, OPERATORS.md §2.10)")
-
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    class RunningCount(StatefulProcessor):
-        def init(self, handle):
-            self._cnt = handle.getValueState(
-                "cnt", StructType([StructField("n", LongType())]))
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = sum(len(pdf) for pdf in rows)
-            prev = self._cnt.get()
-            total = (prev[0] if prev else 0) + n
-            self._cnt.update((total,))
-            yield pd.DataFrame({"domain": [key[0]], "n": [total]})
-
-        def close(self):
-            pass
-
-    src = str(tmp_path / "tws_src")
-    spark.createDataFrame([("a.com",), ("a.com",), ("b.com",)],
-                          "domain string").write.parquet(src)
-    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    q = None
-    try:
-        stream = spark.readStream.schema("domain string").parquet(src)
-        out_schema = StructType([StructField("domain", StringType()),
-                                 StructField("n", LongType())])
-        got = []
-        q = (stream.groupBy("domain")
-             .transformWithStateInPandas(RunningCount(), out_schema,
-                                         "Update", "None")
-             .writeStream.foreachBatch(
-                 lambda b, e: got.extend((r.domain, r.n) for r in b.collect()))
-             .option("checkpointLocation", str(tmp_path / "tws_ck"))
-             .start())
-        q.processAllAvailable()
-        spark.createDataFrame([("a.com",), ("c.com",)], "domain string") \
-            .write.mode("append").parquet(src)
-        q.processAllAvailable()
-        assert {("a.com", 2), ("b.com", 1)} <= set(got)   # batch 1
-        assert {("a.com", 3), ("c.com", 1)} <= set(got)   # accumulated
-    finally:
-        # stop in finally: a mid-stream failure must not leak a
-        # running query holding the RocksDB store for the session
-        if q is not None:
-            q.stop()
-        if prov is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prov)

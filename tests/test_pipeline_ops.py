@@ -1,6 +1,6 @@
 """Tests for the round-2 training-pipeline ops: line-level dedup,
 eval-set decontamination, PII scrubbing, sequence packing, URL
-normalization, connected-components dedup groups, streaming dedup."""
+normalization, connected-components dedup groups."""
 
 from __future__ import annotations
 
@@ -312,38 +312,6 @@ def test_connected_components_transitive_closure_beats_pairwise(spark):
     assert got == {10: 10, 11: 10, 12: 10}
 
 
-# -------------------------------------------------------- streaming dedup
-
-def test_streaming_dedup_matches_batch(spark, sf_dir, tmp_path):
-    from sparkspatial import streaming
-
-    src = str(tmp_path / "pages_src")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pages = docs.select(
-        F.concat(F.lit("p/"), (F.col("doc_id") % 120).cast("string"))
-        .alias("url"),
-        F.to_timestamp(
-            F.from_unixtime(F.lit(1700000000) + F.col("doc_id") * 60))
-        .alias("warc_ts"),
-        F.encode("text", "utf-8").alias("html"),
-        "text", "lang",
-        F.col("source").alias("domain"))
-    pages.repartition(6).write.mode("overwrite").parquet(src)
-
-    stream = streaming.read_pages_stream(spark, src,
-                                         max_files_per_trigger=2)
-    deduped = streaming.streaming_dedup(stream, key_cols=("url",),
-                                        watermark="365 days")
-    q = (deduped.writeStream.outputMode("append")
-         .format("memory").queryName("dedup_out").start())
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT url FROM dedup_out")
-    # one row per distinct url, exactly
-    assert got.count() == 120
-    assert got.distinct().count() == 120
-
-
 # ----------------------------------------------------------------- semdedup
 
 def test_semdedup_matches_per_cluster_bruteforce(spark, sf_dir):
@@ -432,35 +400,6 @@ def test_semdedup_mega_cluster_cap(spark):
     assert len(got) <= 3 + int(np.ceil(n / cap)) + 3
 
 
-# ------------------------------------------------- streaming quality gate
-
-def test_streaming_quality_filter_matches_batch(spark, sf_dir, tmp_path):
-    """Kappa property: the text quality/lang expressions are plain
-    column expressions, so the SAME code path filters a stream and a
-    batch identically (no separate streaming implementation)."""
-    from sparkspatial import streaming
-
-    src = str(tmp_path / "docs_src")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.repartition(5).write.mode("overwrite").parquet(src)
-
-    pred = (text.quality_score_sql("text", "spark") + " >= 5e-1 AND "
-            + text.lang_id_sql("text", "spark") + " = 'en'")
-    batch_ids = {r.doc_id
-                 for r in docs.where(F.expr(pred)).select("doc_id").collect()}
-
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", 2).parquet(src))
-    q = (stream.where(F.expr(pred)).select("doc_id")
-         .writeStream.outputMode("append")
-         .format("memory").queryName("qfilter_out").start())
-    q.processAllAvailable()
-    q.stop()
-    stream_ids = {r.doc_id for r in spark.sql(
-        "SELECT doc_id FROM qfilter_out").collect()}
-    assert stream_ids == batch_ids and len(batch_ids) > 0
-
-
 # ------------------------------------------------- randomized brute force
 
 def test_line_dedup_random_corpus_bruteforce(spark):
@@ -544,10 +483,10 @@ def test_bpe_token_count_cross_engine(spark):
     assert "'t" in got[3][1] and "'re" in got[3][1]
 
 
-# ------------------------------------------------- streaming near-dup
+# ------------------------------------------------- numpy MinHash parity
 
 def test_minhash_pandas_matches_batch(docs):
-    """The streaming-safe numpy signature path is bit-identical to the
+    """The numpy reference signature path is bit-identical to the
     batch window-lead path."""
     import numpy as np
 
@@ -558,53 +497,6 @@ def test_minhash_pandas_matches_batch(docs):
     want = batch[[f"mh{j}" for j in range(8)]].to_numpy()
     assert (batch["doc_id"].to_numpy() == pdf["doc_id"].to_numpy()).all()
     assert np.array_equal(got, want)
-
-
-def test_streaming_near_dup_alerts_match_batch(spark, sf_dir, tmp_path):
-    """Alerts from the stream == batch band join of the same rows
-    against the same static index."""
-    from sparkspatial import streaming
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # static corpus index: every 3rd doc
-    corpus = docs.where("doc_id % 3 = 0").select("doc_id", "text")
-    corpus_bands = text.band_keys(
-        text.minhash_signatures(corpus, n_hashes=8), bands=4).persist()
-    corpus_bands.count()
-
-    # the stream: every 5th doc (multiples of 15 are exact dups of
-    # indexed corpus docs -> guaranteed alerts)
-    stream_rows = docs.where("doc_id % 5 = 0").select(
-        F.concat(F.lit("p/"), F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.from_unixtime(F.lit(1700000000) + F.col("doc_id")))
-        .alias("warc_ts"),
-        "text")
-    src = str(tmp_path / "ndup_src")
-    stream_rows.repartition(4).write.mode("overwrite").parquet(src)
-
-    stream = (spark.readStream.schema(stream_rows.schema)
-              .option("maxFilesPerTrigger", 2).parquet(src))
-    alerts = streaming.streaming_near_dup_alerts(
-        stream, corpus_bands, n_hashes=8, bands=4, watermark="365 days")
-    q = (alerts.writeStream.outputMode("append")
-         .format("memory").queryName("ndup_out").start())
-    q.processAllAvailable()
-    q.stop()
-    got = {(r.url, r.doc_id) for r in spark.sql(
-        "SELECT url, doc_id FROM ndup_out").collect()}
-
-    batch_sigs = text.minhash_signatures(
-        stream_rows.withColumnRenamed("url", "sid"), id_col="sid",
-        n_hashes=8)
-    want = {(r.sid, r.doc_id) for r in
-            text.band_keys(batch_sigs, id_col="sid", bands=4)
-            .join(corpus_bands, ["band", "bh"])
-            .select("sid", "doc_id").distinct().collect()}
-    corpus_bands.unpersist()
-    assert got == want
-    # every streamed multiple of 15 must alert against its twin
-    both = {r.doc_id for r in docs.where("doc_id % 15 = 0").collect()}
-    assert {(f"p/{d}", d) for d in both} <= got
 
 
 # ------------------------------------------- cross-engine regex fuzzing
@@ -666,49 +558,6 @@ def test_regex_ops_cross_engine_fuzz(spark):
     assert not mismatches, list(mismatches.items())[:3]
 
 
-# --------------------------------------------- streaming sink resume
-
-def test_streaming_file_sink_resumes_exactly_once(spark, sf_dir, tmp_path):
-    """File-sink + checkpointLocation restart contract: stop a stream
-    mid-input, restart from the same checkpoint, and the sink holds
-    every input row EXACTLY once (no dupes, no gaps) — the streaming
-    side of the engine's resumability story."""
-    import shutil
-
-    src = str(tmp_path / "src")
-    stage = str(tmp_path / "stage")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.select("doc_id", "lang").where("doc_id < 200") \
-        .write.mode("overwrite").parquet(src)
-    docs.select("doc_id", "lang").where("doc_id >= 200") \
-        .coalesce(1).write.mode("overwrite").parquet(stage)
-
-    def run_available():
-        stream = (spark.readStream.schema("doc_id long, lang string")
-                  .parquet(src))
-        q = (stream.writeStream.outputMode("append")
-             .format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    run_available()  # first run: only the first 200 docs exist
-    assert spark.read.parquet(out).count() == 200
-
-    # more input lands; restart from the SAME checkpoint
-    import glob
-    for i, f in enumerate(
-            glob.glob(stage + "/part-*.parquet")):
-        shutil.copy(f, f"{src}/late-{i}.parquet")
-    run_available()
-    got = spark.read.parquet(out)
-    # exactly once: the first 200 are NOT re-emitted, the rest appear
-    assert got.count() == 500
-    assert got.select("doc_id").distinct().count() == 500
-
-
 # --------------------------------------------- star-contraction CC
 
 def _unionfind(nodes, edges):
@@ -765,17 +614,12 @@ def test_star_cc_long_path_logarithmic_rounds(spark):
 def test_hashmin_falls_back_to_star_on_long_chain(spark):
     """Diameter > max_iter: hash-min no longer hard-fails — it falls
     back to star contraction (ADVICE r2) and still returns the exact
-    components. fallback_star=False keeps the old RuntimeError."""
-    import pytest
-
+    components."""
     edges = [(i, i + 1) for i in range(60)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {r.node: r.component
            for r in graph.connected_components(df, max_iter=5).collect()}
     assert set(got.values()) == {0} and len(got) == 61
-    with pytest.raises(RuntimeError, match="no convergence"):
-        graph.connected_components(df, max_iter=5,
-                                   fallback_star=False).count()
 
 
 def test_hashmin_stagnation_fallback_early_and_exact(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkspatial import cells, extract, geom, join, tiles, zones
@@ -110,6 +111,68 @@ def test_spatial_join_shuffle_and_salted_same_result(spark, points_df, zones_df)
     got2 = {(r.url, r.zone_id) for r in salted.select("url", "zone_id").collect()}
     assert got1 == want
     assert got2 == want
+
+
+def _rebind_expr_ids(df, ids: dict):
+    """`df` with each column in `ids` re-projected under that fixed
+    expression id (the ids a frame gets when it is the first one built
+    in its JVM)."""
+    jvm = df.sparkSession._jvm
+    cat = jvm.org.apache.spark.sql.catalyst
+    # checkpointed under other names, so the optimizer can neither
+    # collapse nor drop the re-binding aliases below
+    renamed = df.select(*[F.col(c).alias(c + "_src") if c in ids else c
+                          for c in df.columns]).localCheckpoint()
+    src = renamed.select(*[F.col(c + "_src").alias(c) if c in ids else c
+                           for c in df.columns])
+    plan = src._jdf.queryExecution().analyzed()
+    plist = plan.projectList()
+    for i, c in enumerate(df.columns):
+        if c in ids:
+            a = plist.apply(i)
+            fixed = cat.expressions.Alias(
+                a.child(), a.name(),
+                cat.expressions.ExprId(ids[c], a.exprId().jvmId()),
+                a.qualifier(), a.explicitMetadata(),
+                a.nonInheritableMetadataKeys())
+            plist = plist.updated(i, fixed)
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        df.sparkSession._jsparkSession,
+        cat.plans.logical.Project(plist, plan.child()))
+    return DataFrame(jdf, df.sparkSession)
+
+
+def test_spatial_join_point_side_with_low_expr_ids(spark, points_df,
+                                                   zones_df):
+    """Spark canonicalizes lambda variables to small expression ids, and
+    filter inference reads that canonical form. With the points' lat/lon
+    on the ids the PIP fold's lambda variables canonicalize to, the
+    predicate looked cover-only: the optimizer copied it onto the cover
+    side, where every task failed with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND
+    (seen after a session's earlier history left the point frame with
+    such ids). The broadcast and the salted shuffle join must both
+    return the brute-force pairs."""
+    import re
+
+    probe = spark.createDataFrame(
+        [], "lat double, lon double, "
+            "edges array<struct<x0:double,y0:double,x1:double,y1:double>>")
+    cond = (probe.where(join.pip_jvm_predicate("lat", "lon"))
+            ._jdf.queryExecution().analyzed().condition())
+    low = sorted({int(i) for i in re.findall(
+        r"lambda none#(\d+)", cond.canonicalized().toString())})
+    assert len(low) >= 2
+    pts = _rebind_expr_ids(points_df.select("url", "lat", "lon"),
+                           {"lat": low[0], "lon": low[1]})
+    want = brute_force_pairs(points_df.select("url", "lat", "lon").toPandas(),
+                             zones_df.toPandas())
+    for kw in ({"broadcast": True},
+               {"broadcast": False, "salt": True, "hot_threshold": 10,
+                "hot_relative": False}):
+        out = join.spatial_join(pts, zones_df, how="inner", **kw)
+        got = {(r.url, r.zone_id)
+               for r in out.select("url", "zone_id").collect()}
+        assert got == want, kw
 
 
 def test_spatial_join_modes(spark, points_df, zones_df):
