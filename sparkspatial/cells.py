@@ -177,38 +177,19 @@ def covering_cells(minlon: float, minlat: float, maxlon: float, maxlat: float,
     return (np.int64(res) << _RES_SHIFT) | (gy.ravel() << _Y_SHIFT) | gx.ravel()
 
 
-def covering_cells_many(minlon, minlat, maxlon, maxlat, res: int,
-                        max_cells_per_box: int = 256) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized covering for many bboxes.
+def covering_cells_many(minlon, minlat, maxlon, maxlat,
+                        res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized covering for many bboxes, all at `res`.
 
-    Returns (row_index, cell) pairs; a bbox whose cover at `res` would
-    exceed `max_cells_per_box` is covered at successively coarser
-    resolutions until it fits (cells of mixed resolution are fine —
-    the join plan matches points at every polygon resolution present).
+    Returns (row_index, cell) pairs: bbox i contributes
+    covering_cells(bbox i, res), tagged with i.
     """
-    minlon = np.asarray(minlon, dtype=np.float64)
-    minlat = np.asarray(minlat, dtype=np.float64)
-    maxlon = np.asarray(maxlon, dtype=np.float64)
-    maxlat = np.asarray(maxlat, dtype=np.float64)
-    idx_out: list[np.ndarray] = []
-    cell_out: list[np.ndarray] = []
-    for i in range(len(minlon)):
-        r = res
-        while r > 0:
-            n = 1 << r
-            nx = (int(np.floor((maxlon[i] + 180.0) / 360.0 * n))
-                  - int(np.floor((minlon[i] + 180.0) / 360.0 * n)) + 1)
-            ny = (int(np.floor((maxlat[i] + 90.0) / 180.0 * n))
-                  - int(np.floor((minlat[i] + 90.0) / 180.0 * n)) + 1)
-            if nx * ny <= max_cells_per_box:
-                break
-            r -= 1
-        cells = covering_cells(minlon[i], minlat[i], maxlon[i], maxlat[i], r)
-        idx_out.append(np.full(len(cells), i, dtype=np.int64))
-        cell_out.append(cells)
-    if not idx_out:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    return np.concatenate(idx_out), np.concatenate(cell_out)
+    per_box = [covering_cells(*b, res)
+               for b in zip(minlon, minlat, maxlon, maxlat)]
+    idx = np.repeat(np.arange(len(per_box), dtype=np.int64),
+                    [len(c) for c in per_box])
+    return idx, (np.concatenate(per_box) if per_box
+                 else np.empty(0, np.int64))
 
 
 def pick_resolution(width_deg: float, target_cell_deg: float = 0.05) -> int:
@@ -223,9 +204,10 @@ def grid_idx_sql(coord_expr: str, res: int, axis: str) -> str:
     """Clamped grid index of one axis at `res` — the x/y building
     block of :func:`cell_sql`, same formula and clamps as
     :func:`encode` / :func:`covering_cells` (e-notation literals force
-    DOUBLE arithmetic in both Spark SQL and DuckDB). Exposed so cover
-    explodes (join.spatial_join_polygons' JVM probe path) derive their
-    grid ranges from THIS module, never re-inventing the encoding."""
+    DOUBLE arithmetic in both Spark SQL and DuckDB). Exposed so the
+    join's cover explode and its cover-size aggregate
+    (join.explode_bbox_cells, join.zone_plan) derive their grid ranges
+    from THIS module, never re-inventing the encoding."""
     n = 1 << res
     off, span = ("1.8e2", "3.6e2") if axis == "x" else ("9e1", "1.8e2")
     return (f"LEAST(GREATEST(CAST(FLOOR(({coord_expr} + {off}) / {span} "

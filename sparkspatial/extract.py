@@ -6,10 +6,10 @@ OSM XML -> node points): Common-Crawl-style pages
 
 Two paths, both exact:
 
-1. **Marker extraction** (:func:`extract_points`): vectorized regex over
+1. **Marker extraction** (:func:`extract_points`): JVM regex over
    the HTML for ``<span class="geo" data-lat=".." data-lon="..">``
-   markers — 0..N points per page (a mapInPandas UDTF, the analog of
-   the reference's multi-geometry explode, Data.groovy:210-218).
+   markers — 0..N points per page (an explode, the analog of the
+   reference's multi-geometry explode, Data.groovy:210-218).
 2. **Arithmetic geotag** (:func:`geotag`): the canonical h32-based
    derivation from geocode.py, evaluated entirely JVM-side
    (md5/conv/arithmetic — whole-stage-codegen, no Python), used for
@@ -24,9 +24,7 @@ testable end-to-end.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,10 +36,6 @@ EXTRACT_TEXT_VERSION = 1
 _SCRIPT_RE = re.compile(rb"<(script|style)\b[^>]*>.*?</\1>", re.S | re.I)
 _TAG_RE = re.compile(rb"<[^>]*>")
 _WS_RE = re.compile(r"\s+")
-_MARKER_RE = re.compile(
-    r'<span class="geo" data-lat="(-?\d+(?:\.\d+)?(?:[eE]-?\d+)?)"'
-    r' data-lon="(-?\d+(?:\.\d+)?(?:[eE]-?\d+)?)">'
-)
 
 
 def extract_text(html: bytes) -> str:
@@ -79,59 +73,32 @@ _MARKER_SQL_RE = ('<span class="geo" data-lat="(-?[0-9.eE+-]+)"'
 
 
 def extract_points(pages: DataFrame, html_col: str = "html",
-                   url_col: str = "url", impl: str = "jvm") -> DataFrame:
+                   url_col: str = "url") -> DataFrame:
     """pages -> (url, lat double, lon double), 0..N rows per page.
 
-    impl="jvm" (default): `regexp_extract_all` over the decoded HTML —
-    whole-stage codegen, no Python in the hot path. At 32 local threads
-    this is ~3x the throughput of the Arrow UDF path (two chained
-    Python workers per task oversubscribe the box into kernel-time
-    collapse; measured 89% sys).
-
-    impl="pandas": the Arrow mapInPandas UDTF (kept as the template
-    for extractions that genuinely need Python — e.g. real HTML
-    parsers, bs4-class logic).
+    `regexp_extract_all` over the decoded HTML — whole-stage codegen,
+    no Python in the hot path. At 32 local threads this is ~3x the
+    throughput of an Arrow mapInPandas UDTF (two chained Python
+    workers per task oversubscribe the box into kernel-time collapse;
+    measured 89% sys).
     """
-    schema = f"{url_col} string, lat double, lon double"
-
-    if impl == "jvm":
-        # ONE regex pass over the page: extract whole matches (group
-        # 0), then parse lat/lon out of each ~60-char match with a
-        # quote split — the old two-call form (group 1, then group 2)
-        # ran the full-page regex twice per page (the same
-        # re-evaluation family as the r3 norm-in-lambda finding, 2x
-        # not nx). The match is '<span class="geo" data-lat="LAT"
-        # data-lon="LON">', so quote-delimited fields 3/5 are exactly
-        # the two capture groups.
-        ms = F.expr(
-            f"regexp_extract_all(decode({html_col}, 'UTF-8'), "
-            f"'{_MARKER_SQL_RE}', 0)")
-        return (pages
-                .select(F.col(url_col), F.explode(ms).alias("m"))
-                .select(url_col,
-                        F.split("m", '"').getItem(3)
-                        .cast("double").alias("lat"),
-                        F.split("m", '"').getItem(5)
-                        .cast("double").alias("lon")))
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            htmls = pdf[html_col].map(
-                lambda b: bytes(b).decode("utf-8", errors="replace"))
-            found = htmls.str.extractall(_MARKER_RE)
-            if len(found) == 0:
-                yield pd.DataFrame({url_col: pd.Series([], dtype=str),
-                                    "lat": pd.Series([], dtype=np.float64),
-                                    "lon": pd.Series([], dtype=np.float64)})
-                continue
-            idx = found.index.get_level_values(0)
-            yield pd.DataFrame({
-                url_col: pdf[url_col].values[idx],
-                "lat": found[0].astype(np.float64).values,
-                "lon": found[1].astype(np.float64).values,
-            })
-
-    return pages.mapInPandas(_gen, schema=schema)
+    # ONE regex pass over the page: extract whole matches (group 0),
+    # then parse lat/lon out of each ~60-char match with a quote split
+    # — the old two-call form (group 1, then group 2) ran the
+    # full-page regex twice per page (the same re-evaluation family as
+    # the r3 norm-in-lambda finding, 2x not nx). The match is
+    # '<span class="geo" data-lat="LAT" data-lon="LON">', so
+    # quote-delimited fields 3/5 are exactly the two capture groups.
+    ms = F.expr(
+        f"regexp_extract_all(decode({html_col}, 'UTF-8'), "
+        f"'{_MARKER_SQL_RE}', 0)")
+    return (pages
+            .select(F.col(url_col), F.explode(ms).alias("m"))
+            .select(url_col,
+                    F.split("m", '"').getItem(3)
+                    .cast("double").alias("lat"),
+                    F.split("m", '"').getItem(5)
+                    .cast("double").alias("lon")))
 
 
 def geotag(df: DataFrame, domain_col: str, url_col: str,

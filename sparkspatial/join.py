@@ -4,21 +4,23 @@ Re-creation of the reference's RTREE-accelerated spatial joins
 (`a.the_geom && b.the_geom AND ST_CONTAINS/ST_INTERSECTS(...)`,
 Transform.groovy:422-444, Data.groovy:177,278) as a Spark plan:
 
-1. **Cover** (vector->raster): each polygon explodes into the grid
-   cells its bbox covers (cells.covering_cells_many). Polygons whose
-   cover would exceed ``max_cells_per_poly`` coarsen individually, so
-   the cover stays bounded regardless of zone size — the RTREE-node
-   analog.
-2. **Coarse join**: points compute their cell per resolution present
-   on the polygon side (pure JVM arithmetic) and equi-join on
-   ``cell`` — semantically the reference's `&&` bbox prefilter, but
-   expressed as a Catalyst equi-join: broadcast when the cover is
-   small, shuffle-hash otherwise, AQE-replannable.
+1. **Cover** (vector->raster): each polygon decodes once
+   (decode_polygons), one aggregate picks the finest resolution at
+   which every polygon's bbox covers at most ``MAX_CELLS_PER_POLY``
+   cells (zone_plan), and the polygon explodes in the JVM into the
+   grid cells its bbox covers at that one resolution
+   (explode_bbox_cells) — the RTREE-node analog.
+2. **Coarse join**: points compute their cell at that resolution
+   (pure JVM arithmetic) and equi-join on ``cell`` — semantically the
+   reference's `&&` bbox prefilter, but expressed as a Catalyst
+   equi-join: broadcast when the cover is small, shuffle-hash
+   otherwise, AQE-replannable.
 3. **Bbox prefilter** (JVM, whole-stage codegen): exact envelope test
-   before anything crosses into Python.
-4. **Refine** (Arrow): even-odd point-in-polygon over decoded WKB in a
-   mapInPandas batch — the `ST_CONTAINS` exact predicate. Each
-   distinct polygon decodes once per batch; points test vectorized.
+   on the join output.
+4. **Refine**: even-odd point-in-polygon, by default in the JVM — a
+   codegen'd fold over the polygon's edge array (pip_jvm_predicate);
+   `refine="exact"` runs it in numpy over decoded WKB in a
+   mapInPandas batch instead — the `ST_CONTAINS` exact predicate.
 5. **Skew**: hot cells (sampled histogram) salt the join key —
    see skew.py.
 
@@ -103,116 +105,103 @@ def _poly_edges(g) -> list[tuple[float, float, float, float]]:
     return edges
 
 
-def cover_polygons(polys: DataFrame, poly_id: str = "zone_id",
-                   wkb_col: str = "the_geom_wkb",
-                   res: int = DEFAULT_RES,
-                   max_cells_per_poly: int = MAX_CELLS_PER_POLY,
-                   with_edges: bool = False) -> DataFrame:
-    """Polygon DataFrame -> exploded (poly cols..., cell, minx..maxy
-    [, edges]).
+def decode_polygons(polys: DataFrame, poly_id: str, wkb_col: str,
+                    with_edges: bool) -> DataFrame:
+    """Polygon DataFrame -> one row per polygon: (poly_id, the_geom_wkb,
+    minx, miny, maxx, maxy[, edges]).
 
-    Carries the WKB (and optionally the decoded edge list, for the
-    JVM refinement path) through the explode so refinement needs no
-    second join with the polygon table (standard replication trade-off
-    from the distributed spatial-join literature).
+    The ONE Arrow stage of the zone side: each polygon decodes once,
+    and the bbox (and, for point joins, the edge list the JVM refine
+    folds over) ride with its WKB. Everything downstream — the
+    resolution choice and the cell explode — is JVM.
     """
-    out_schema = (f"{poly_id} string, the_geom_wkb binary, cell long, "
+    out_schema = (f"{poly_id} string, the_geom_wkb binary, "
                   "minx double, miny double, maxx double, maxy double")
     if with_edges:
         out_schema += (", edges array<struct<x0:double,y0:double,"
                        "x1:double,y1:double>>")
 
-    def _cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids, wkbs, cell_l, bxs, edge_l = [], [], [], [], []
-            for pid, w in zip(pdf[poly_id].values, pdf[wkb_col].values):
-                g = geom.wkb_loads(bytes(w))
-                minx, miny, maxx, maxy = geom.bounds(g)
-                r = res
-                while r > 0:
-                    n = 1 << r
-                    nx = (int(np.floor((maxx + 180.0) / 360.0 * n))
-                          - int(np.floor((minx + 180.0) / 360.0 * n)) + 1)
-                    ny = (int(np.floor((maxy + 90.0) / 180.0 * n))
-                          - int(np.floor((miny + 90.0) / 180.0 * n)) + 1)
-                    if nx * ny <= max_cells_per_poly:
-                        break
-                    r -= 1
-                cc = cells.covering_cells(minx, miny, maxx, maxy, r)
-                ids.extend([pid] * len(cc))
-                wkbs.extend([bytes(w)] * len(cc))
-                cell_l.append(cc)
-                bxs.extend([(minx, miny, maxx, maxy)] * len(cc))
-                if with_edges:
-                    edge_l.extend([_poly_edges(g)] * len(cc))
-            cell_arr = (np.concatenate(cell_l) if cell_l
-                        else np.empty(0, np.int64))
-            b = np.array(bxs, dtype=np.float64).reshape(-1, 4)
+            gs = [geom.wkb_loads(bytes(w)) for w in pdf[wkb_col].values]
+            b = np.array([geom.bounds(g) for g in gs],
+                         dtype=np.float64).reshape(-1, 4)
             out = pd.DataFrame({
-                poly_id: ids, "the_geom_wkb": wkbs, "cell": cell_arr,
+                poly_id: pdf[poly_id].values,
+                "the_geom_wkb": pdf[wkb_col].values,
                 "minx": b[:, 0], "miny": b[:, 1],
                 "maxx": b[:, 2], "maxy": b[:, 3],
             })
             if with_edges:
-                out["edges"] = edge_l
+                out["edges"] = [_poly_edges(g) for g in gs]
             yield out
 
-    return polys.mapInPandas(_cover, schema=out_schema)
+    return polys.select(poly_id, wkb_col).mapInPandas(_decode,
+                                                      schema=out_schema)
 
 
-def cover_stats(polys: DataFrame, poly_id: str, wkb_col: str, res: int,
-                max_cells_per_poly: int) -> tuple[int, int]:
-    """(global resolution, total cover rows at it) in one stats pass.
+def _grid_ranges(res: int) -> list[tuple[str, str]]:
+    """[(lo, hi) x, (lo, hi) y] clamped grid-index SQL of the
+    (minx, miny, maxx, maxy) bbox's cover at `res` — cells.grid_idx_sql
+    at both ends, so the explode, the size and cells.covering_cells
+    agree cell for cell."""
+    return [(cells.grid_idx_sql(lo, res, a), cells.grid_idx_sql(hi, res, a))
+            for lo, hi, a in (("minx", "maxx", "x"), ("miny", "maxy", "y"))]
+
+
+def explode_bbox_cells(df: DataFrame, res: int) -> DataFrame:
+    """`df` with one row per grid cell its (minx, miny, maxx, maxy)
+    bbox covers at `res` (new `cell` column) — the one bbox explode of
+    both join sides, zones and probes: one JVM generator over the
+    x-by-y grid range, row-identical to cells.covering_cells (clamped
+    at the grid edges)."""
+    (x0, x1), (y0, y1) = _grid_ranges(res)
+    cell = cells.compose_cell_sql("gx", "gy", res)
+    return df.selectExpr("*", (
+        f"inline(flatten(transform(sequence({y0}, {y1}), gy -> "
+        f"transform(sequence({x0}, {x1}), gx -> "
+        f"named_struct('cell', {cell})))))"))
+
+
+def zone_plan(decoded: DataFrame, res: int) -> tuple[int, int]:
+    """(global resolution, cover rows at it) in ONE aggregate over the
+    decoded zones.
 
     The global resolution is the finest <= `res` at which EVERY
-    polygon's bbox cover fits in `max_cells_per_poly` cells: one
+    polygon's bbox cover fits in MAX_CELLS_PER_POLY cells: one
     resolution keeps the point side to a single cell per point (no
     explode) — the bbox condition inside the hash join cheaply rejects
     the extra candidates coarse cells admit, which beats multiplying
-    the probe side by the number of resolutions. The row count drives
-    the broadcast-vs-shuffle decision without materializing (or
-    persisting) the exploded cover itself.
+    the probe side by the number of resolutions. The aggregate takes
+    the largest and the total cover size at every resolution 0..res
+    at once, from the clamped ranges explode_bbox_cells walks, so the
+    total is the cover's row count; it drives the broadcast-vs-shuffle
+    decision without materializing the cover.
     """
-    def _req(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rs, bxs = [], []
-            for w in pdf[wkb_col].values:
-                g = geom.wkb_loads(bytes(w))
-                minx, miny, maxx, maxy = geom.bounds(g)
-                r = res
-                while r > 0:
-                    n = 1 << r
-                    nx = (int(np.floor((maxx + 180.0) / 360.0 * n))
-                          - int(np.floor((minx + 180.0) / 360.0 * n)) + 1)
-                    ny = (int(np.floor((maxy + 90.0) / 180.0 * n))
-                          - int(np.floor((miny + 90.0) / 180.0 * n)) + 1)
-                    if nx * ny <= max_cells_per_poly:
-                        break
-                    r -= 1
-                rs.append(r)
-                bxs.append((minx, miny, maxx, maxy))
-            b = np.array(bxs, dtype=np.float64).reshape(-1, 4)
-            yield pd.DataFrame({"r": rs, "minx": b[:, 0], "miny": b[:, 1],
-                                "maxx": b[:, 2], "maxy": b[:, 3]})
+    aggs = []
+    for r in range(res + 1):
+        (x0, x1), (y0, y1) = _grid_ranges(r)
+        n = F.expr(f"({x1} - {x0} + 1) * ({y1} - {y0} + 1)")
+        # decimal: a fine resolution's total can pass 2^63 (ANSI sum)
+        aggs += [F.max(n), F.sum(n.cast("decimal(38,0)"))]
+    row = decoded.agg(*aggs).first()
+    if row[0] is None:
+        return res, 0
+    r = max([r for r in range(res + 1)
+             if row[2 * r] <= MAX_CELLS_PER_POLY], default=0)
+    return r, int(row[2 * r + 1])
 
-    stats = polys.mapInPandas(
-        _req, schema="r int, minx double, miny double, "
-                     "maxx double, maxy double").persist()
-    try:
-        row = stats.agg(F.min("r").alias("rmin")).collect()[0]
-        if row.rmin is None:
-            return res, 0
-        rmin = int(row.rmin)
-        n = 1 << rmin
-        ncover = stats.selectExpr(
-            f"(CAST(FLOOR((maxx + 1.8e2) / 3.6e2 * {n}e0) AS BIGINT)"
-            f" - CAST(FLOOR((minx + 1.8e2) / 3.6e2 * {n}e0) AS BIGINT) + 1)"
-            f" * (CAST(FLOOR((maxy + 9e1) / 1.8e2 * {n}e0) AS BIGINT)"
-            f" - CAST(FLOOR((miny + 9e1) / 1.8e2 * {n}e0) AS BIGINT) + 1)"
-            " AS nc").agg(F.sum("nc").alias("t")).collect()[0]
-        return rmin, int(ncover.t)
-    finally:
-        stats.unpersist()
+
+def zone_cover(polys: DataFrame, poly_id: str, wkb_col: str, res: int,
+               with_edges: bool) -> tuple[DataFrame, int, int]:
+    """(cover, resolution, cover rows): THE zone-side path of every
+    polygon join — decode once (decode_polygons), pick the resolution
+    in one aggregate (zone_plan), explode the cover lazily in the JVM
+    (explode_bbox_cells). The cover is never persisted here, so no
+    cached blocks leak across calls; ZoneIndex.persist() pins it."""
+    decoded = decode_polygons(polys, poly_id, wkb_col, with_edges)
+    r, n_cover = zone_plan(decoded, res)
+    return explode_bbox_cells(decoded, r), r, n_cover
 
 
 class ZoneIndex:
@@ -220,22 +209,21 @@ class ZoneIndex:
 
     The polygon side of a spatial join is the small, slowly-changing
     dimension: at corpus scale the same zone set joins against many
-    page batches (and every micro-batch of a stream). Building the
-    cover once and passing it to each `spatial_join` call removes the
-    per-call stats pass + cover rebuild — the RTREE-build-once analog
-    of the reference's `CREATE INDEX ... USING RTREE` before its join
-    queries (SURVEY.md §2.8 P2/P3).
+    page batches. Building the cover once and passing it to each
+    `spatial_join` call removes the per-call plan aggregate + cover
+    rebuild — the RTREE-build-once analog of the reference's
+    `CREATE INDEX ... USING RTREE` before its join queries (SURVEY.md
+    §2.8 P2/P3).
 
     `persist()` pins the exploded cover in executor memory (caller
     owns the lifetime; `release()` or session.unpersist_all() frees).
     """
 
     def __init__(self, cover: DataFrame, res: int, n_cover: int,
-                 refine: str, poly_id: str):
+                 poly_id: str):
         self.cover = cover
         self.res = res
         self.n_cover = n_cover
-        self.refine = refine
         self.poly_id = poly_id
 
     def persist(self) -> "ZoneIndex":
@@ -250,17 +238,13 @@ class ZoneIndex:
 
 
 def build_zone_index(polys: DataFrame, poly_id: str = "zone_id",
-                     wkb_col: str = "the_geom_wkb", res: int = DEFAULT_RES,
-                     max_cells_per_poly: int = MAX_CELLS_PER_POLY,
-                     refine: str = "jvm") -> ZoneIndex:
-    """One stats pass + cover build, reusable across spatial_join
-    calls (see ZoneIndex)."""
-    r, n_cover = cover_stats(polys, poly_id, wkb_col, res,
-                             max_cells_per_poly)
-    cover = cover_polygons(polys, poly_id=poly_id, wkb_col=wkb_col,
-                           res=r, max_cells_per_poly=max_cells_per_poly,
-                           with_edges=(refine == "jvm"))
-    return ZoneIndex(cover, r, n_cover, refine, poly_id)
+                     wkb_col: str = "the_geom_wkb",
+                     res: int = DEFAULT_RES) -> ZoneIndex:
+    """Point-join zone state, reusable across spatial_join calls (see
+    ZoneIndex). Its cover carries the edge arrays, so it serves both
+    refine="jvm" and refine="exact"."""
+    return ZoneIndex(*zone_cover(polys, poly_id, wkb_col, res, True),
+                     poly_id)
 
 
 def point_cells(points: DataFrame, res_list: list[int],
@@ -334,7 +318,6 @@ def spatial_join(points: DataFrame, polys: DataFrame, *,
                  poly_id: str = "zone_id", wkb_col: str = "the_geom_wkb",
                  how: str = "inner", refine: str = "jvm",
                  res: int = DEFAULT_RES,
-                 max_cells_per_poly: int = MAX_CELLS_PER_POLY,
                  broadcast: bool | None = None,
                  salt: bool = False,
                  hot_threshold: int = skew.DEFAULT_HOT_THRESHOLD,
@@ -348,12 +331,11 @@ def spatial_join(points: DataFrame, polys: DataFrame, *,
     how : inner | left | left_semi | left_anti
         `left_anti` is the reference's hole-less-outer branch pattern
         (`b.id_relation IS NULL`, Transform.groovy:437-442).
-    refine : jvm | exact | bbox
+    refine : jvm | exact
         `jvm` (default): even-odd PIP as a codegen'd higher-order
         expression over the polygon edge arrays — zero Python in the
         join. `exact`: the Arrow/numpy refinement (template for
-        predicates Python libraries must evaluate). `bbox`: envelope
-        test only (rectangular zones).
+        predicates Python libraries must evaluate).
     broadcast : None -> decide by counting the polygon side (it is the
         small side by contract); True/False to force.
     salt : salt hot cells before the shuffle join (skew.py). Only
@@ -369,23 +351,17 @@ def spatial_join(points: DataFrame, polys: DataFrame, *,
     point_id_cols = point_id_cols or ["url"]
     keep_poly_cols = keep_poly_cols if keep_poly_cols is not None else [poly_id]
 
+    if refine not in ("jvm", "exact"):
+        raise ValueError(f"unsupported refine={refine!r}")
     if index is not None:
-        # prebuilt polygon-side state: no stats pass, no cover rebuild
-        if index.refine != refine:
-            raise ValueError(
-                f"index built for refine={index.refine!r}, got {refine!r}")
+        # prebuilt polygon-side state: no plan aggregate, no cover rebuild
+        if refine == "jvm" and "edges" not in index.cover.columns:
+            raise ValueError("refine='jvm' needs an index with edge "
+                             "arrays (build_zone_index)")
         cover, res, n_cover = index.cover, index.res, index.n_cover
     else:
-        # one bounded stats pass over the (small) polygon side picks the
-        # global resolution and sizes the cover; the exploded cover
-        # itself is then built lazily inside the join plan and never
-        # persisted (no cached blocks leak across calls)
-        res, n_cover = cover_stats(polys, poly_id, wkb_col, res,
-                                   max_cells_per_poly)
-        cover = cover_polygons(polys, poly_id=poly_id, wkb_col=wkb_col,
-                               res=res,
-                               max_cells_per_poly=max_cells_per_poly,
-                               with_edges=(refine == "jvm"))
+        cover, res, n_cover = zone_cover(polys, poly_id, wkb_col, res,
+                                         with_edges=(refine == "jvm"))
     if broadcast is None:
         broadcast = n_cover <= BROADCAST_MAX_COVER_ROWS
 
@@ -443,9 +419,7 @@ def spatial_join(points: DataFrame, polys: DataFrame, *,
     keep = point_cols + [c for c in keep_poly_cols if c not in point_cols]
     keep_inner = [inner.get(c, c) for c in keep]
 
-    if refine == "bbox":
-        matched = coarse.select(*keep_inner)
-    elif refine == "jvm":
+    if refine == "jvm":
         matched = (coarse.where(pip_jvm_predicate(plat, plon))
                    .select(*keep_inner))
     else:
@@ -472,17 +446,12 @@ def spatial_join(points: DataFrame, polys: DataFrame, *,
 
 def build_poly_zone_index(polys: DataFrame, poly_id: str = "zone_id",
                           wkb_col: str = "the_geom_wkb",
-                          res: int = DEFAULT_RES,
-                          max_cells_per_poly: int = MAX_CELLS_PER_POLY
-                          ) -> ZoneIndex:
+                          res: int = DEFAULT_RES) -> ZoneIndex:
     """Prebuilt zone-side state for spatial_join_polygons (cover
     WITHOUT edge arrays — the polygonal refine decodes WKB): the
     build-once analog of build_zone_index."""
-    r, n_cover = cover_stats(polys, poly_id, wkb_col, res,
-                             max_cells_per_poly)
-    cover = cover_polygons(polys, poly_id=poly_id, wkb_col=wkb_col,
-                           res=r, max_cells_per_poly=max_cells_per_poly)
-    return ZoneIndex(cover, r, n_cover, "poly", poly_id)
+    return ZoneIndex(*zone_cover(polys, poly_id, wkb_col, res, False),
+                     poly_id)
 
 
 def spatial_join_polygons(probes: DataFrame, zones: DataFrame | None = None,
@@ -492,10 +461,8 @@ def spatial_join_polygons(probes: DataFrame, zones: DataFrame | None = None,
                           poly_id: str = "zone_id",
                           wkb_col: str = "the_geom_wkb",
                           res: int = DEFAULT_RES,
-                          max_cells_per_poly: int = MAX_CELLS_PER_POLY,
                           broadcast: bool | None = None,
                           how: str = "inner",
-                          probe_bbox_cols: tuple | None = None,
                           probe_rect: bool = False,
                           index: ZoneIndex | None = None) -> DataFrame:
     """Polygon x polygon ST_INTERSECTS join (r2 verdict item 2).
@@ -504,12 +471,12 @@ def spatial_join_polygons(probes: DataFrame, zones: DataFrame | None = None,
     (`ST_INTERSECTS(make_valid(a), b)`, Data.groovy:177); the engine's
     `spatial_join` handles only a point probe side. Plan here:
 
-    1. One stats pass picks the zone resolution r (same rule as the
-       point join); the zone cover explodes at r.
-    2. The PROBE side covers its bboxes at EXACTLY r (never coarsens —
-       same-resolution cells are the equi-join key). Probes are the
-       small geometries (buildings/parcels), so their cover is a few
-       cells each.
+    1. The zone side takes the point join's path (zone_cover): one
+       aggregate picks the resolution r; the zone cover explodes at r.
+    2. The PROBE side covers its bboxes at EXACTLY r with the same
+       explode (explode_bbox_cells — same-resolution cells are the
+       equi-join key). Probes are the small geometries
+       (buildings/parcels), so their cover is a few cells each.
     3. Cell equi-join (broadcast when the zone cover is small), then a
        JVM bbox-overlap prefilter.
     4. Pair dedup WITHOUT a shuffle by the reference-cell rule: a
@@ -525,44 +492,36 @@ def spatial_join_polygons(probes: DataFrame, zones: DataFrame | None = None,
     'left_anti' reduce against the probe table.
 
     Probe-side JVM fast path (the 10^12-row side must stay codegen):
-    when `probe_bbox_cols` names existing (minx, miny, maxx, maxy)
+    `probe_rect=True` treats the probes' (minx, miny, maxx, maxy)
     columns — the natural at-scale table layout, same as ZONE_SCHEMA —
-    the probe cover is a pure Catalyst double sequence-explode over
-    the bbox's grid range: NO Python stage before the join.
-    `probe_rect=True` additionally treats the bbox itself as the probe
-    geometry (no `probe_wkb` column needed; the refine synthesizes the
-    quad from the bbox), leaving exactly ONE Python stage in the whole
-    probe pipeline. Without bbox columns the cover decodes WKB in an
-    Arrow stage (general path).
+    as the probe geometry (no `probe_wkb` column needed; the refine
+    synthesizes the quad from the bbox): NO Python stage before the
+    join, exactly ONE in the whole probe pipeline. Otherwise the
+    probes decode in an Arrow stage (decode_polygons, general path).
 
     At scale: one exchange (the cell join) when the zone cover
     broadcasts; the refine is map-side on the join output. Probe-side
     cover replication is bounded by the probe bbox size at r.
 
     Pass `index=build_poly_zone_index(zones)` to reuse the zone-side
-    state (cover and its stats pass) across calls.
+    state (cover and its plan aggregate) across calls.
     """
     if index is not None:
         if zones is not None:
             raise ValueError("pass zones OR index, not both")
-        if index.refine != "poly":
-            raise ValueError(
-                f"index built for refine={index.refine!r}, need 'poly' "
-                f"(build_poly_zone_index)")
         if poly_id not in ("zone_id", index.poly_id):
             raise ValueError(
                 f"poly_id={poly_id!r} conflicts with the index's "
                 f"{index.poly_id!r}")
-        zcover, r, n_cover = index.cover, index.res, index.n_cover
+        # a point-join index's edge arrays are dead weight here
+        zcover, r, n_cover = (index.cover.drop("edges"), index.res,
+                              index.n_cover)
         poly_id = index.poly_id
     else:
         if zones is None:
             raise ValueError("pass zones or index")
-        r, n_cover = cover_stats(zones, poly_id, wkb_col, res,
-                                 max_cells_per_poly)
-        zcover = cover_polygons(zones, poly_id=poly_id, wkb_col=wkb_col,
-                                res=r,
-                                max_cells_per_poly=max_cells_per_poly)
+        zcover, r, n_cover = zone_cover(zones, poly_id, wkb_col, res,
+                                        with_edges=False)
     if probe_id == poly_id:
         # a self-overlay with one id name would carry duplicate columns
         # through the cell equi-join and silently corrupt the refine's
@@ -574,38 +533,15 @@ def spatial_join_polygons(probes: DataFrame, zones: DataFrame | None = None,
             f"(e.g. probes.withColumnRenamed) before the join")
     if broadcast is None:
         broadcast = n_cover <= BROADCAST_MAX_COVER_ROWS
-    if probe_bbox_cols is not None or probe_rect:
-        # JVM cover: explode the bbox's grid range at the zone
-        # resolution (identical formula + clamping as covering_cells)
-        bx0, by0, bx1, by1 = probe_bbox_cols or ("minx", "miny",
-                                                 "maxx", "maxy")
-        keep = [F.col(probe_id)] + \
-            ([] if probe_rect else [F.col(probe_wkb).alias("_pwkb")])
-        pcover = (probes.select(
-            *keep,
-            F.col(bx0).alias("pminx"), F.col(by0).alias("pminy"),
-            F.col(bx1).alias("pmaxx"), F.col(by1).alias("pmaxy"))
-            .withColumn("_gx", F.explode(F.expr(
-                f"sequence({cells.grid_idx_sql('pminx', r, 'x')}, "
-                f"{cells.grid_idx_sql('pmaxx', r, 'x')})")))
-            .withColumn("_gy", F.explode(F.expr(
-                f"sequence({cells.grid_idx_sql('pminy', r, 'y')}, "
-                f"{cells.grid_idx_sql('pmaxy', r, 'y')})")))
-            .withColumn("cell", F.expr(
-                cells.compose_cell_sql("_gx", "_gy", r)))
-            .drop("_gx", "_gy"))
+    # probe cover at the zone resolution r, never coarsened — the
+    # equi-join key must agree with the zone side
+    if probe_rect:
+        pbox = probes.select(probe_id, "minx", "miny", "maxx", "maxy")
     else:
-        # general path: probe cover at the same resolution, never
-        # coarsened (2**60 cap) — the equi-join key must agree with
-        # the zone side
-        pcover = cover_polygons(probes, poly_id=probe_id,
-                                wkb_col=probe_wkb,
-                                res=r, max_cells_per_poly=1 << 60)
-        pcover = pcover.select(
-            F.col(probe_id), F.col("the_geom_wkb").alias("_pwkb"),
-            "cell",
-            F.col("minx").alias("pminx"), F.col("miny").alias("pminy"),
-            F.col("maxx").alias("pmaxx"), F.col("maxy").alias("pmaxy"))
+        pbox = (decode_polygons(probes, probe_id, probe_wkb, False)
+                .withColumnRenamed("the_geom_wkb", "_pwkb"))
+    pcover = explode_bbox_cells(pbox, r).withColumnsRenamed(
+        {c: "p" + c for c in ("minx", "miny", "maxx", "maxy")})
 
     right = F.broadcast(zcover) if broadcast else zcover
     coarse = pcover.join(right, on="cell", how="inner")

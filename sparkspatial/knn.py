@@ -676,7 +676,7 @@ def range_join(points: DataFrame, queries: DataFrame, radius_m: float, *,
                     p = pos[m]
                     idx, cell = cells.covering_cells_many(
                         blo[m], qlat[p] - dlat, bhi[m], qlat[p] + dlat,
-                        int(r), max_cells_per_box=10 ** 9)
+                        int(r))
                     frames.append(pd.DataFrame(
                         {"qid": qid[p][idx], "qlat": qlat[p][idx],
                          "qlon": qlon[p][idx], "cell": cell}))

@@ -303,8 +303,7 @@ def trigram_from_chars_sql(chars_col: str) -> str:
 
 
 def trigram_familiarity(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id",
-                        broadcast_model: bool = True) -> DataFrame:
+                        id_col: str = "doc_id") -> DataFrame:
     """CCNet-style language-model quality proxy WITHOUT floats: score
     each document by how familiar its character trigrams are under the
     corpus's own MLE trigram counts (CCNet buckets by wiki-LM
@@ -325,8 +324,7 @@ def trigram_familiarity(docs: DataFrame, text_col: str = "text",
     is a few rows per doc). The model side collapses map-side to the
     bounded distinct-trigram set (~charset^3, corpus-independent) and
     broadcasts back; the per-doc agg combines partially before its one
-    exchange. `broadcast_model=False` shuffles the join for
-    pathological alphabets.
+    exchange.
     """
     # project the normalized CHAR ARRAY once; the trigram lambda then
     # does three O(1) element_at lookups per trigram instead of an
@@ -341,8 +339,7 @@ def trigram_familiarity(docs: DataFrame, text_col: str = "text",
            .selectExpr(id_col,
                        f"explode({trigram_from_chars_sql('_nc')}) AS tri"))
     model = tri.groupBy("tri").agg(F.count(F.lit(1)).alias("tri_n"))
-    m = F.broadcast(model) if broadcast_model else model
-    return (tri.join(m, "tri")
+    return (tri.join(F.broadcast(model), "tri")
             .groupBy(id_col)
             .agg(F.count(F.lit(1)).alias("n_tri"),
                  F.sum("tri_n").alias("fam_sum")))
@@ -795,9 +792,8 @@ def line_dedup_duckdb_sql(table: str = "corpus", text_col: str = "text",
 
 def shingle_hash_pos(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id",
-                     shingle_k: int = 3,
-                     keep_tok: bool = False) -> DataFrame:
-    """(id, pos, sh[, tok]) positional rolling shingle-hash rows for
+                     shingle_k: int = 3) -> DataFrame:
+    """(id, pos, sh) positional rolling shingle-hash rows for
     documents with >= k tokens — THE single derivation every
     shingle-based operator builds on (MinHash, decontamination,
     winnowing, duplicated-span detect/remove). One definition keeps
@@ -815,7 +811,7 @@ def shingle_hash_pos(docs: DataFrame, text_col: str = "text",
     # NO exchange. Arithmetic is unchanged term for term (th_j*coef_j
     # % M summed, % M — all < 2^62, no overflow), so every downstream
     # consumer (MinHash, decontaminate, winnowing, spans) sees
-    # bit-identical (id, pos, sh[, tok]) rows; pinned by the oracle
+    # bit-identical (id, pos, sh) rows; pinned by the oracle
     # gate and test_pipeline_ops.
     norm = norm_text_sql(text_col, "spark")
     coefs = [pow(SHINGLE_B, shingle_k - 1 - j, MERSENNE31)
@@ -832,12 +828,9 @@ def shingle_hash_pos(docs: DataFrame, text_col: str = "text",
               f"transform(sequence(0, size(_toks) - {shingle_k}), "
               f"p -> ({terms}) % {MERSENNE31}) "
               f"ELSE array() END")
-    out = d.select(F.col(id_col), "_toks",
-                   F.posexplode(F.expr(sh_arr)).alias("pos", "sh"))
-    cols = [id_col, "pos", F.col("sh")]
-    if keep_tok:
-        cols.append(F.expr("element_at(_toks, pos + 1)").alias("tok"))
-    return out.select(*cols).where(F.col("sh").isNotNull())
+    return (d.select(F.col(id_col),
+                     F.posexplode(F.expr(sh_arr)).alias("pos", "sh"))
+            .where(F.col("sh").isNotNull()))
 
 
 def _short_doc_hashes(docs: DataFrame, text_col: str, id_col: str,
@@ -1339,10 +1332,9 @@ def remove_duplicated_spans(docs: DataFrame, text_col: str = "text",
     Scale shape: spans explode into covered token positions (bounded
     by span extents), tokens drop via a left_anti on (id, pos),
     reassembly reuses the doc exchange. The corpus is tokenized
-    twice (hash branch for detection, token branch for reassembly) —
-    at large scale `.persist()` the `shingle_hash_pos(keep_tok=True)`
-    frame and derive both sides from it to trade memory for the
-    second scan.
+    twice (hash branch for detection, token branch for reassembly);
+    one persisted frame carrying both each position's hash and its
+    token would trade memory for the second scan.
     """
     spans = duplicated_spans(docs, text_col, id_col, shingle_k, min_run)
     covered = spans.select(

@@ -9,7 +9,8 @@ every rollup level a map-side combine over the previous one, so the
 full pyramid costs barely more than the finest level.
 
 raster->vector: a cell becomes its bounding polygon (WKB); vector->
-raster is join.cover_polygons. Round-tripping a zone through
+raster is join.explode_bbox_cells over a polygon's bbox
+(join.zone_cover). Round-tripping a zone through
 vector->raster->vector yields the zone's cell tessellation —
 the reference's grid view of a zone.
 """

@@ -54,10 +54,8 @@ def test_extract_points_markers(spark):
     pages = spark.createDataFrame(
         [(u, bytearray(h)) for u, h in rows], "url string, html binary")
     want = [("u1", 10.5, -20.25), ("u1", 48.0, 2.0), ("u3", -33.9, 151.2)]
-    for impl in ("jvm", "pandas"):  # both paths, identical results
-        got = (extract.extract_points(pages, impl=impl)
-               .orderBy("url", "lat").collect())
-        assert [(r.url, r.lat, r.lon) for r in got] == want, impl
+    got = extract.extract_points(pages).orderBy("url", "lat").collect()
+    assert [(r.url, r.lat, r.lon) for r in got] == want
 
 
 def test_extract_text_udf_matches_python(spark):
@@ -111,6 +109,125 @@ def test_spatial_join_shuffle_and_salted_same_result(spark, points_df, zones_df)
     got2 = {(r.url, r.zone_id) for r in salted.select("url", "zone_id").collect()}
     assert got1 == want
     assert got2 == want
+
+
+def _count_jobs(spark, group: str, fn):
+    """(Spark jobs `fn` ran, its result), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_zone_side_job_ceilings(spark, points_df, zones_df):
+    """The zone side is one decode stage, one plan aggregate and a JVM
+    explode: building + persisting a ZoneIndex runs at most 5 Spark
+    jobs, an inline broadcast join at most 4 (8 and 7 with the old
+    per-polygon stats pass)."""
+    zones_df.count(), points_df.count()   # fixture caches filled first
+    n_build, idx = _count_jobs(spark, "zone-index-build", lambda:
+                               join.build_zone_index(zones_df).persist())
+    idx.release()
+    n_join, rows = _count_jobs(spark, "inline-spatial-join", lambda:
+                               join.spatial_join(points_df, zones_df,
+                                                 broadcast=True).collect())
+    assert rows
+    assert n_build <= 5 and n_join <= 4, (n_build, n_join)
+
+
+# Boxes whose covers reach the clamped grid edge at the default
+# resolution (lon 180, lat 90, lat -90, wholly past the domain) and one
+# ordinary box.
+_EDGE_BOXES = [("z_east", 179.95, 10.0, 180.0, 10.05),
+               ("z_north", 20.0, 89.97, 20.05, 90.0),
+               ("z_south", 30.0, -90.0, 30.05, -89.97),
+               ("z_out", 180.1, 90.1, 180.2, 90.2),
+               ("z_mid", 1.0, 1.0, 1.1, 1.05)]
+
+
+def test_zone_cover_at_grid_edge_counts_its_rows(spark):
+    """n_cover (the broadcast decision's input) is the cover's real row
+    count where cells clamp at the grid edge, and each zone's cover is
+    exactly cells.covering_cells of its bbox, for both index kinds."""
+    zdf = spark.createDataFrame(
+        [(z, bytearray(geom.wkb_dumps(_rect_poly(*b))))
+         for z, *b in _EDGE_BOXES], "zone_id string, the_geom_wkb binary")
+    for build in (join.build_zone_index, join.build_poly_zone_index):
+        idx = build(zdf)
+        assert idx.res == join.DEFAULT_RES
+        assert idx.n_cover == idx.cover.count(), build.__name__
+        got: dict = {}
+        for r in idx.cover.select("zone_id", "cell").collect():
+            got.setdefault(r.zone_id, []).append(r.cell)
+        for z, *b in _EDGE_BOXES:
+            want = cells.covering_cells(*b, idx.res).tolist()
+            assert sorted(got[z]) == sorted(want), (build.__name__, z)
+
+
+def _cell_poly(*rings):
+    """Polygon from rings given in res-9 cell units (360/2^9 lon,
+    180/2^9 lat), so every vertex lies on a cell line at res >= 9."""
+    return ("Polygon", [np.array([(x * 360 / 512, y * 180 / 512)
+                                  for x, y in r + r[:1]], dtype=np.float64)
+                        for r in rings])
+
+
+def _box(x0, y0, x1, y1):
+    return [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
+
+
+def test_grid_edge_zones_joins_match_bruteforce(spark):
+    """Zones touching the antimeridian from both sides and both poles,
+    one past the domain and a holed one, all edges on cell lines (the
+    cover picks res 9). Points and half-cell probe rects on a half-cell
+    lattice around each zone hit cell lines, edges and vertices. The
+    point join (broadcast and salted shuffle) == numpy
+    point-in-polygon; the polygon join (WKB and probe_rect paths) ==
+    all-pairs geom.polygons_intersect."""
+    zs = [("east", _cell_poly(_box(253, 50, 256, 54))),
+          ("west", _cell_poly([(-256, 50), (-253, 50), (-256, 54)])),
+          ("north", _cell_poly(_box(20, 254, 23, 256))),
+          ("south", _cell_poly([(-30, -256), (-27, -256), (-27, -255),
+                                (-29, -255), (-29, -253), (-30, -253)])),
+          ("past", _cell_poly(_box(255, 255, 258, 258))),
+          ("holed", _cell_poly(_box(-3, -3, 3, 3), _box(-1, -1, 1, 1)))]
+    cw, ch = 360 / 512, 180 / 512
+    lattice = sorted({(float(x), float(y)) for _, g in zs
+                      for x0, y0, x1, y1 in [geom.bounds(g)]
+                      for x in np.arange(x0 - cw, x1 + 1.5 * cw, cw / 2)
+                      for y in np.arange(y0 - ch, y1 + 1.5 * ch, ch / 2)})
+    zdf = spark.createDataFrame(
+        [(z, bytearray(geom.wkb_dumps(g))) for z, g in zs],
+        "zone_id string, the_geom_wkb binary")
+    assert join.build_poly_zone_index(zdf).res == 9
+
+    pdf = pd.DataFrame({"url": [f"p{i}" for i in range(len(lattice))],
+                        "lat": [y for _, y in lattice],
+                        "lon": [x for x, _ in lattice]})
+    want = brute_force_pairs(pdf, zdf.toPandas())
+    assert {z for _, z in want} == {z for z, _ in zs}
+    for kw in ({"broadcast": True},
+               {"broadcast": False, "salt": True, "hot_threshold": 50,
+                "hot_relative": False}):
+        out = join.spatial_join(spark.createDataFrame(pdf), zdf, **kw)
+        assert {(r.url, r.zone_id) for r in out.collect()} == want, kw
+
+    rects = [(f"r{i}", x, y, x + cw / 2, y + ch / 2)
+             for i, (x, y) in enumerate(lattice)]
+    want = {(p, z) for p, *b in rects for z, g in zs
+            if geom.polygons_intersect(_rect_poly(*b), g)}
+    assert {z for _, z in want} == {z for z, _ in zs}
+    wkb = spark.createDataFrame(
+        [(p, bytearray(geom.wkb_dumps(_rect_poly(*b)))) for p, *b in rects],
+        "probe_id string, the_geom_wkb binary")
+    box = spark.createDataFrame(rects, "probe_id string, minx double, "
+                                       "miny double, maxx double, maxy double")
+    for probes, kw in ((wkb, {}), (box, {"probe_rect": True})):
+        got = join.spatial_join_polygons(probes, zdf, **kw).collect()
+        assert {(r.probe_id, r.zone_id) for r in got} == want, kw
 
 
 def _rebind_expr_ids(df, ids: dict):
@@ -395,16 +512,6 @@ def test_jvm_refine_equals_python_refine(spark, points_df):
     py = join.spatial_join(points_df, zdf, refine="exact", broadcast=True)
     a = {(r.url, r.zone_id) for r in jvm.select("url", "zone_id").collect()}
     b = {(r.url, r.zone_id) for r in py.select("url", "zone_id").collect()}
-    assert a == b
-
-
-def test_spatial_join_bbox_refine_equals_exact_for_rects(spark, points_df):
-    # rectangles only -> bbox refinement must equal exact refinement
-    zdf = zones.synthetic_zones(spark, n=24, include_hotspots=False)
-    exact = join.spatial_join(points_df, zdf, refine="exact", broadcast=True)
-    bbox = join.spatial_join(points_df, zdf, refine="bbox", broadcast=True)
-    a = {(r.url, r.zone_id) for r in exact.select("url", "zone_id").collect()}
-    b = {(r.url, r.zone_id) for r in bbox.select("url", "zone_id").collect()}
     assert a == b
 
 
@@ -784,13 +891,8 @@ def test_knn_index_density_start_ring_one_round(spark, knn_lattice):
     assert _density_ring(idx.n_points, idx.n_cells, 8) == 4
     q = spark.createDataFrame(inner, "qid string, qlat double, qlon double")
     want = _knn_rows(knn_bruteforce(pts, q, k=8))
-    sc = spark.sparkContext
-    sc.setJobGroup("knn-one-round", "knn density start ring")
-    try:
-        got = _knn_rows(knn_join(pts, q, k=8, res=_LAT_RES, index=idx))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("knn-one-round"))
+    n_jobs, got = _count_jobs(spark, "knn-one-round", lambda: _knn_rows(
+        knn_join(pts, q, k=8, res=_LAT_RES, index=idx)))
     assert got == want
     assert n_jobs <= 8, n_jobs
 
