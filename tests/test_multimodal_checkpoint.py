@@ -287,6 +287,133 @@ def test_checkpoint_snapshot_id_keys_resume_to_input(spark, tmp_path):
     assert lin_other_after == lin_other_before
 
 
+def _count_jobs(spark, group: str, fn):
+    """(Spark jobs `fn` ran, its result), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_checkpoint_stage_job_ceilings(spark, tmp_path):
+    """A stage write is one Spark job (the data write): lineage comes
+    from the committed files' footers and the returned frame reads with
+    the manifest's schema. A resume and a load() run none (4 / 1 / 1
+    when lineage re-scanned the data and reads inferred the schema)."""
+    ck = Checkpointer(str(tmp_path))
+    df = spark.range(0, 800, 1, 8).withColumn("v", F.col("id") * 3)
+    fp = fingerprint_of("jobs", "v1")
+    n_cold, out = _count_jobs(spark, "ck-cold",
+                              lambda: ck.stage(df, "jobs", fp))
+    n_resume, again = _count_jobs(spark, "ck-resume",
+                                  lambda: ck.stage(df, "jobs", fp))
+    n_load, loaded = _count_jobs(spark, "ck-load",
+                                 lambda: ck.load(spark, "jobs", fp))
+    assert n_cold <= 1 and n_resume == 0 and n_load == 0, \
+        (n_cold, n_resume, n_load)
+    for frame in (out, again, loaded):
+        assert frame.schema.simpleString() == df.schema.simpleString()
+        assert frame.count() == 800
+
+
+def _nested(spark):
+    """A struct holding a leaf also named `_pid` (path `s._pid`, which
+    must not be mistaken for the top-level column) and an array."""
+    return (spark.range(0, 300, 1, 5)
+            .withColumn("s", F.struct(F.col("id").alias("_pid"),
+                                      F.lit("x").alias("tag")))
+            .withColumn("arr", F.array(F.col("id"), F.col("id") + 1)))
+
+
+@pytest.mark.parametrize("case", ["eight", "empty", "many_files", "nested"])
+def test_checkpoint_footer_lineage_equals_data_scan(spark, tmp_path, case):
+    """rows_out per partition_id, taken from the parquet footers, equals
+    a groupBy("_pid").count() over the committed data directory, and
+    the rows sum to load().count()."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    from sparkspatial.checkpoint import _LINEAGE_ARROW
+
+    frames = {
+        "eight": lambda: spark.range(0, 1000, 1, 8),
+        "empty": lambda: spark.range(0, 0, 1, 3).withColumn("v", F.lit(1)),
+        "many_files": lambda: spark.range(0, 95, 1, 3),
+        "nested": lambda: _nested(spark),
+    }
+    ck = Checkpointer(str(tmp_path))
+    fp = fingerprint_of("scan", case)
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key)
+    if case == "many_files":
+        spark.conf.set(key, "10")
+    try:
+        ck.stage(frames[case](), "scan", fp)
+    finally:
+        spark.conf.set(key, old)
+    m = json.load(open(tmp_path / "scan" / "_MANIFEST.json"))
+    data = str(tmp_path / "scan" / m["data_dir"])
+    if case == "many_files":         # one partition spans several files
+        parts = [f for f in os.listdir(data) if f.startswith("part-")]
+        assert len(parts) > 3, parts
+
+    want = {r["_pid"]: r["count"] for r in
+            spark.read.parquet(data).groupBy("_pid").count().collect()}
+    lin = ck.lineage(spark, "scan").collect()
+    got = {r.partition_id: r.rows_out for r in lin}
+    assert len(lin) == len(got) and got == want
+    assert {(r.stage, r.fingerprint) for r in lin} <= {("scan", fp)}
+    assert sum(got.values()) == ck.load(spark, "scan", fp).count()
+    if case == "empty":
+        assert lin == []
+    lineage_dir = tmp_path / "scan" / m["lineage_dir"]
+    for f in os.listdir(lineage_dir):
+        if f.endswith(".parquet"):
+            assert pq.read_schema(lineage_dir / f) == _LINEAGE_ARROW
+
+
+def test_checkpoint_footer_counts_fall_back_to_column_read(tmp_path):
+    """Files without `_pid` statistics, or whose row group spans
+    several values, are counted by reading their `_pid` column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparkspatial.checkpoint import _rows_per_pid
+
+    t = pa.table({"_pid": pa.array([2, 2, 5], pa.int32()),
+                  "v": [1, 2, 3]})
+    pq.write_table(t, tmp_path / "part-00000.parquet",
+                   write_statistics=False)
+    pq.write_table(t, tmp_path / "part-00001.parquet")   # min 2 != max 5
+    pq.write_table(t.slice(0, 2), tmp_path / "part-00002.parquet")
+    pq.write_table(t, tmp_path / "_ignored.parquet")
+    assert _rows_per_pid(str(tmp_path)) == {2: 6, 5: 2}
+
+
+def test_checkpoint_manifest_without_schema_loads_by_inference(spark,
+                                                               tmp_path):
+    """A manifest written before the schema was recorded still loads
+    and resumes, through schema inference."""
+    import json
+
+    ck = Checkpointer(str(tmp_path))
+    fp = fingerprint_of("old", "v1")
+    df = _nested(spark)
+    ck.stage(df, "old", fp)
+    path = tmp_path / "old" / "_MANIFEST.json"
+    m = json.load(open(path))
+    del m["schema"]
+    path.write_text(json.dumps(m))
+    for out in (ck.load(spark, "old", fp), ck.stage(df, "old", fp)):
+        assert out.columns == df.columns
+        assert out.count() == 300
+        assert out.agg(F.sum("s._pid")).first()[0] == sum(range(300))
+
+
 # ------------------------------------------------------------ PPM codec
 
 def test_ppm_roundtrip_and_meta(spark):
