@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -50,21 +51,35 @@ def fan_out(df, min_parallelism: int | None = None):
     return df.repartition(target) if parts < target else df
 
 
+def _running_jvm_conf() -> SparkConf | None:
+    """The SparkConf of a driver JVM that already runs in this process
+    (spark-submit started it, or an earlier session did), else None.
+    Never launches a JVM: under plain ``python`` the driver memory and
+    -Xms reach the JVM only through the conf it is launched with."""
+    if SparkContext._jvm is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkConf()
+
+
 def get_spark(app: str = "sparkspatial", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
-    Local-mode defaults come from env (`SPARK_GRAFT_CPUS`); on a real
-    cluster the master/memory flags come from spark-submit and this
-    function only applies SQL-level settings, all of which scale with
-    cluster size via AQE.
+    The master is, in order: the `master` argument; the one a running
+    driver JVM was launched with (``spark-submit --master ...``);
+    ``local[SPARK_GRAFT_CPUS]``. The driver memory
+    (``SPARK_DRIVER_MEM``, default 16g) and ``SPARK_GRAFT_XMS`` apply
+    only when this call launches the JVM; under spark-submit they come
+    from its flags. The SQL-level settings always apply, and all of
+    them scale with cluster size via AQE.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
+    running = _running_jvm_conf()
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -74,16 +89,20 @@ def get_spark(app: str = "sparkspatial", master: str | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
     )
-    # Benchmarks pre-size the heap (-Xms == -Xmx) so timed runs never
-    # pay heap-growth page-fault storms (observed 89% sys time cold at
-    # local[32], see .claude/skills/verify/SKILL.md). Env-gated: tests
-    # and ad-hoc sessions keep the default lazy heap.
-    xms = os.environ.get("SPARK_GRAFT_XMS")
-    if xms:
-        builder = builder.config("spark.driver.extraJavaOptions",
-                                 f"-Xms{xms}")
+    if master or running is None or not running.contains("spark.master"):
+        builder = builder.master(master or f"local[{cpus}]")
+    if running is None:
+        builder = builder.config(
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # Benchmarks pre-size the heap (-Xms == -Xmx) so timed runs
+        # never pay heap-growth page-fault storms (observed 89% sys
+        # time cold at local[32]). Env-gated: tests and ad-hoc
+        # sessions keep the default lazy heap.
+        xms = os.environ.get("SPARK_GRAFT_XMS")
+        if xms:
+            builder = builder.config("spark.driver.extraJavaOptions",
+                                     f"-Xms{xms}")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, str(v))
     return builder.getOrCreate()

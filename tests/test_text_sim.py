@@ -389,12 +389,17 @@ def test_cosine_topk_blocked_cross_type_ids(emb):
                for r in out)
 
 
-def test_cosine_topk_blocked_randomized_vs_bruteforce(spark):
-    """Seeded randomized parity vs numpy brute force: odd corpus and
-    query sizes, random block configs, k beyond the corpus, and
-    DISCRETE vector components (from {-1,0,1,2}) so exact cosine
-    TIES occur and the (cos desc, id asc) order is really exercised,
-    incl. an empty query set."""
+@pytest.mark.parametrize("path", ["cosine_topk_blocked", "knn_graph",
+                                  "ivf_topk"])
+def test_cosine_topk_blocked_randomized_vs_bruteforce(spark, path):
+    """Seeded randomized parity vs numpy brute force for every exact
+    top-k plan on the shared core: odd corpus and query sizes, random
+    block configs, k beyond the corpus, and DISCRETE vector components
+    (from {-1,0,1,2}) so exact cosine TIES occur and the (cos desc,
+    id asc) order is really exercised, incl. an empty query set.
+    knn_graph ranks the corpus against itself (self excluded by id);
+    ivf_topk probes every cluster (n_probe == n_clusters <= n_c), which
+    makes it exact."""
     import numpy as np
     rng = np.random.default_rng(11)
     for trial in range(6):
@@ -408,6 +413,8 @@ def test_cosine_topk_blocked_randomized_vs_bruteforce(spark):
         qmat = rng.choice([-1.0, 0.0, 1.0, 2.0], size=(n_q, dim))
         cids = rng.permutation(1000 + np.arange(n_c))
         qids = rng.permutation(np.arange(n_q))  # disjoint from cids
+        if path == "knn_graph":
+            qmat, qids = cmat, cids
         corpus = spark.createDataFrame(
             [(int(cids[i]), [float(x) for x in cmat[i]])
              for i in range(n_c)],
@@ -416,22 +423,32 @@ def test_cosine_topk_blocked_randomized_vs_bruteforce(spark):
             [(int(qids[i]), [float(x) for x in qmat[i]])
              for i in range(n_q)],
             "qid long, qvec array<double>")
-        got = {(r.qid, r.rnk): r.vec_id
-               for r in sim.cosine_topk_blocked(
-                   corpus, queries, k, q_blocks=qb, c_blocks=cb).collect()}
+        if path == "cosine_topk_blocked":
+            out = sim.cosine_topk_blocked(corpus, queries, k,
+                                          q_blocks=qb, c_blocks=cb)
+        elif path == "knn_graph":
+            out = sim.knn_graph(corpus, k, n_blocks=cb).select(
+                F.col("vec_id").alias("qid"),
+                F.col("nbr").alias("vec_id"), "rnk")
+        else:
+            n_cl = 1 + trial % min(n_c, 3)
+            out = sim.ivf_topk(corpus, queries, k, n_clusters=n_cl,
+                               n_probe=n_cl, q_blocks=qb, c_blocks=cb)
+        got = {(r.qid, r.rnk): r.vec_id for r in out.collect()}
         cn = np.linalg.norm(cmat, axis=1)
         cn[cn == 0] = 1.0
         want = {}
-        for i in range(n_q):
+        for i in range(len(qids)):
             qn = np.linalg.norm(qmat[i]) or 1.0
             # SAME division order as the impl (query norm first):
             # (a/b)/c vs (a/c)/b can differ by 1 ulp and split a
             # discrete-vector tie differently (review-caught r4)
             cos = (cmat @ qmat[i]) / qn / cn
-            order = np.lexsort((cids, -cos))[:k]
+            order = np.lexsort((cids, -cos))
+            order = order[cids[order] != qids[i]][:k]
             for rnk, j in enumerate(order, 1):
                 want[(int(qids[i]), rnk)] = int(cids[j])
-        assert got == want, (trial, n_c, n_q, dim, k, qb, cb)
+        assert got == want, (path, trial, n_c, n_q, dim, k, qb, cb)
 
 
 def test_cosine_topk_blocked_null_qid_rejected(emb):
@@ -479,15 +496,17 @@ def test_knn_graph_exact_vs_bruteforce(emb):
 def test_embedding_query_path_has_no_driver_collect():
     """r2 verdict item 1: the shipped embedding near-dup queries must
     not ride a corpus-sized driver collect. cosine_pairs_blocked's
-    body has no toPandas/collect, and both driver queries reference
-    only the blocked path (cosine_pairs stays test-oracle-only)."""
+    body and the block-pair grouping it runs have no toPandas/collect,
+    and both driver queries reference only the blocked path
+    (cosine_pairs stays test-oracle-only)."""
     import inspect
 
     import __spark_entry__ as entry
 
-    blocked_src = inspect.getsource(sim.cosine_pairs_blocked)
-    assert "toPandas" not in blocked_src
-    assert ".collect(" not in blocked_src
+    for fn in (sim.cosine_pairs_blocked, sim._block_pairs):
+        blocked_src = inspect.getsource(fn)
+        assert "toPandas" not in blocked_src, fn.__name__
+        assert ".collect(" not in blocked_src, fn.__name__
     for fn in (entry.q_embedding_near_dup,
                entry.q_embedding_dedup_survivors):
         src = inspect.getsource(fn)
@@ -514,14 +533,16 @@ def test_ivf_topk_recall_and_exactness(emb):
 def test_ivf_topk_query_side_is_distributed(emb):
     """r4 verdict item 7: ivf_topk's query side must never collect to
     the driver (the cosine_topk_blocked cogroup pattern scoped to
-    probed clusters), and block-partitioned runs are row-identical to
-    the 1x1 run (the cogroup partials are exact partials)."""
+    probed clusters: ivf_topk's body and the _cogroup_topk plan it
+    runs), and block-partitioned runs are row-identical to the 1x1 run
+    (the cogroup partials are exact partials)."""
     import inspect
 
-    src = inspect.getsource(sim.ivf_topk)
-    assert "toPandas" not in src
-    assert ".collect(" not in src
-    assert "createDataFrame" not in src
+    for fn in (sim.ivf_topk, sim._cogroup_topk):
+        src = inspect.getsource(fn)
+        assert "toPandas" not in src, fn.__name__
+        assert ".collect(" not in src, fn.__name__
+        assert "createDataFrame" not in src, fn.__name__
 
     queries = emb.where("vec_id % 100 = 0").select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))

@@ -1,18 +1,23 @@
 """Spark jobs and seconds per ``__spark_entry__.queries()`` entry.
 
-Each entry is built and forced by ONE action, a row count plus
-``sum(xxhash64(all columns))``, under a job group of its own; the jobs
-counted are the group's (AQE query stages, i.e. shuffles and
-broadcasts, count as jobs). The hash is cast to decimal(38,0) before
-the sum: a bigint sum overflows under Spark 4's ANSI mode. At the
-sizes this repo measures a Spark job costs 0.3-2 s, so the job count
-is the cost to cut.
+Each entry runs under two job groups of its own. The build group
+covers ``fn(spark, sf_dir)``, i.e. every job that runs while the
+query is built (schema inference of a parquet read, a driver collect,
+an eager checkpoint, an iterative loop). The action group covers ONE
+action that forces the result, a row count plus
+``sum(xxhash64(all columns))``. The jobs counted are the groups' (AQE
+query stages, i.e. shuffles and broadcasts, count as jobs). The hash
+is cast to decimal(38,0) before the sum: a bigint sum overflows under
+Spark 4's ANSI mode. At the sizes this repo measures a Spark job
+costs 0.3-2 s, so the job count is the cost to cut.
 
 Writes ``BENCH/JOBS.json``:
-``{"sf_dir", "queries": {name: {"jobs", "seconds", "rows"}},
-"total": {"jobs", "seconds", "queries"}}`` and prints one line per
-entry. Entries run in ``queries()`` order in one process, so an entry
-that fills a session cache first pays for it.
+``{"sf_dir", "queries": {name: {"build_jobs", "action_jobs", "jobs",
+"build_s", "action_s", "seconds", "rows"}}, "total": {same keys but
+rows, plus "queries"}}`` (``jobs`` and ``seconds`` are build plus
+action) and prints one line per entry. Entries run in ``queries()``
+order in one process, so an entry that fills a session cache first
+pays for it.
 
 Usage: python tools/jobcount.py SF_DIR [query ...]
 """
@@ -28,20 +33,31 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 
-def count_jobs(spark, group: str, df) -> tuple[int, float, int]:
-    """(jobs, seconds, rows) of forcing `df` once under `group`."""
-    from pyspark.sql import functions as F
-
+def in_group(spark, group: str, thunk):
+    """(result, jobs, seconds) of calling `thunk()` under job `group`."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     t0 = time.monotonic()
     try:
-        row = df.agg(F.count(F.lit(1)), F.sum(
-            F.xxhash64(*df.columns).cast("decimal(38,0)"))).first()
+        out = thunk()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     dt = time.monotonic() - t0
-    return len(sc.statusTracker().getJobIdsForGroup(group)), dt, int(row[0])
+    return out, len(sc.statusTracker().getJobIdsForGroup(group)), dt
+
+
+def count_jobs(spark, name: str, fn, sf_dir: str) -> dict:
+    """Build jobs, action jobs, seconds and rows of one entry."""
+    from pyspark.sql import functions as F
+
+    df, bj, bs = in_group(spark, f"jobcount-build-{name}",
+                          lambda: fn(spark, sf_dir))
+    row, aj, as_ = in_group(spark, f"jobcount-{name}", lambda: df.agg(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)"))).first())
+    return {"build_jobs": bj, "action_jobs": aj, "jobs": bj + aj,
+            "build_s": round(bs, 3), "action_s": round(as_, 3),
+            "seconds": round(bs + as_, 3), "rows": int(row[0])}
 
 
 def main() -> int:
@@ -60,15 +76,16 @@ def main() -> int:
     for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
-        jobs, dt, rows = count_jobs(spark, f"jobcount-{name}",
-                                    fn(spark, sf_dir))
-        per[name] = {"jobs": jobs, "seconds": round(dt, 3), "rows": rows}
-        print(f"{name:32s} jobs={jobs:4d} s={dt:8.2f} rows={rows}",
-              flush=True)
-    total = {"jobs": sum(v["jobs"] for v in per.values()),
-             "seconds": round(sum(v["seconds"] for v in per.values()), 3),
-             "queries": len(per)}
-    print(f"TOTAL jobs={total['jobs']} s={total['seconds']:.1f} "
+        r = per[name] = count_jobs(spark, name, fn, sf_dir)
+        print(f"{name:32s} build={r['build_jobs']:4d} "
+              f"action={r['action_jobs']:4d} s={r['seconds']:8.2f} "
+              f"rows={r['rows']}", flush=True)
+    total = {key: round(sum(v[key] for v in per.values()), 3)
+             for key in ("build_jobs", "action_jobs", "jobs", "build_s",
+                         "action_s", "seconds")}
+    total["queries"] = len(per)
+    print(f"TOTAL build={total['build_jobs']} action={total['action_jobs']}"
+          f" jobs={total['jobs']} s={total['seconds']:.1f} "
           f"queries={total['queries']}")
     out = os.path.join(ROOT, "BENCH", "JOBS.json")
     os.makedirs(os.path.dirname(out), exist_ok=True)
