@@ -1860,11 +1860,12 @@ def q_dedup_substrings(spark, sf_dir):
 
 
 def q_bpe_merge_rules(spark, sf_dir):
-    """Distributed BPE vocabulary training (Sennrich 2016) over the
-    corpus: 20 merge rules in merge order (sparkspatial.bpe —
-    corpus-sized work once, merge rounds on the word-vocab table).
-    Iterative, not SQL-expressible — rows-only driver check; exact
-    parity with the textbook algorithm is pinned in pytest."""
+    """BPE vocabulary training (Sennrich 2016) over the corpus: 20
+    merge rules in merge order (sparkspatial.bpe — one distributed
+    word count, then the merge loop in the driver over the collected
+    word-count table). Iterative, not SQL-expressible — rows-only
+    driver check; exact parity with the textbook algorithm is pinned
+    in pytest."""
     from sparkspatial import bpe
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

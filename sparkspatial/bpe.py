@@ -1,34 +1,31 @@
-"""Distributed BPE merge training (Sennrich et al. 2016) on Spark.
+"""BPE merge training (Sennrich et al. 2016) with a distributed word count.
 
 The classic byte-pair-encoding vocabulary construction: start from
 characters, repeatedly merge the most frequent adjacent symbol pair.
-The corpus-scale work happens EXACTLY ONCE — the word-frequency count
-(one combiner-friendly shuffle over the token stream). Every merge
-round then runs on the WORD VOCABULARY table (word, weight, symbols),
-which is 10^5-10^7 rows regardless of corpus size — the shape that
-makes BPE training feasible at 100 TB: rounds cost vocab-sized
-aggregations, not corpus scans.
+The corpus-scale work happens EXACTLY ONCE: the word-frequency count,
+one combiner-friendly shuffle over the token stream. The merge loop
+then runs in the driver over the collected (word, weight) table, which
+is 10^5-10^7 rows regardless of corpus size, updating pair counts
+incrementally for the words each merge touches. Training runs the word
+count's Spark jobs and no more, however many merges are asked for.
 
-Per round: explode adjacent symbol pairs -> weight-summed pair counts
-(map-side combine) -> arg-max pair via a distributed TakeOrdered
-(orderBy+limit(1), deterministic ties by pair text) -> apply the
-merge with a greedy left-to-right codegen'd `aggregate` fold over the
-symbol arrays -> localCheckpoint (flat lineage). Only the winning
-pair (2 strings + a count) reaches the driver each round.
+Each merge's arg-max pair depends on the previous merge (merging
+(a, b) creates pairs (x, ab) and (ab, y) whose counts can beat every
+remaining candidate), so rounds cannot be batched; a per-round Spark
+aggregate would cost one job per merge.
 
 Pinned against a pure-Python reference implementation of the textbook
-algorithm in tests/test_pipeline_ops.py.
+algorithm (:func:`bpe_reference`) in tests/test_pipeline_ops.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .text import norm_text_sql
 
-__all__ = ["word_counts", "bpe_train", "bpe_train_with_vocab",
-           "bpe_train_local", "bpe_token_counts", "bpe_reference"]
+__all__ = ["word_counts", "bpe_train", "bpe_reference"]
 
 END = "</w>"  # end-of-word marker (standard BPE)
 
@@ -41,36 +38,6 @@ def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
             .select(F.explode(F.split(F.expr(norm), " ")).alias("word"))
             .where(F.col("word") != "")
             .groupBy("word").agg(F.count(F.lit(1)).alias("weight")))
-
-
-def _lit(s: str) -> str:
-    """Symbol -> Spark SQL string literal (backslashes and quotes in
-    corpus text would otherwise break or escape the inlined fold)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _merge_fold(a: str, b: str, col: str = "syms"):
-    """Column: greedy left-to-right merge of adjacent (a, b) symbol
-    pairs inside a symbol array (the textbook BPE merge), as a
-    codegen'd higher-order aggregate — no Python per word."""
-    return F.expr(
-        f"aggregate({col}, CAST(array() AS array<string>), (acc, x) -> "
-        f"CASE WHEN size(acc) > 0 AND element_at(acc, -1) = {_lit(a)} "
-        f"          AND x = {_lit(b)} "
-        f"     THEN concat(slice(acc, 1, size(acc) - 1), "
-        f"                 array({_lit(a + b)})) "
-        "      ELSE concat(acc, array(x)) END)")
-
-
-def bpe_train(docs: DataFrame, n_merges: int,
-              text_col: str = "text") -> list:
-    """Learn up to `n_merges` BPE merge rules from the corpus.
-
-    Returns [(sym_a, sym_b, weight)] in merge order — the vocabulary
-    artifact (small by definition; it IS driver-side state, like any
-    trained tokenizer). Stops early when no pair repeats.
-    """
-    return bpe_train_with_vocab(docs, n_merges, text_col)[0]
 
 
 def bpe_reference(word_weights: dict, n_merges: int) -> list:
@@ -106,22 +73,17 @@ def bpe_reference(word_weights: dict, n_merges: int) -> list:
     return rules
 
 
-def bpe_train_local(docs: DataFrame, n_merges: int,
-                    text_col: str = "text") -> list:
-    """Learn BPE merge rules with the industrial-standard job shape
-    (what production tokenizer trainers do): the CORPUS-scale work —
-    the word-frequency count over 10^12 tokens — runs distributed
-    exactly once, then the merge loop runs IN-DRIVER over the
-    collected (word, weight) vocabulary with incremental pair-count
-    maintenance. A 10^7-word vocab is ~hundreds of MB of driver
-    memory by construction (word frequencies, not the corpus), and
-    32k merge rounds complete in seconds instead of 32k Spark jobs —
-    the r3 verdict's driver-loop cost mitigation.
+def bpe_train(docs: DataFrame, n_merges: int,
+              text_col: str = "text") -> list:
+    """Learn up to `n_merges` BPE merge rules from the corpus.
 
-    Exact same rules as :func:`bpe_train` (same greedy merge, same
-    (count desc, pair asc) tie order; pytest-pinned). Use the
-    distributed rounds of bpe_train_with_vocab only when the word
-    vocabulary itself cannot fit the driver.
+    Returns [(sym_a, sym_b, weight)] in merge order and stops early
+    when no pair repeats. The word count runs distributed once; its
+    (word, weight) table, not the corpus, is collected to the driver,
+    where the merge loop runs. A 10^7-word vocab is hundreds of MB of
+    driver memory, and 32k merge rounds take seconds there instead of
+    32k Spark jobs. Same greedy merge and (count desc, pair asc) tie
+    order as :func:`bpe_reference` (pytest-pinned).
     """
     wc = {r.word: r.weight
           for r in word_counts(docs, text_col).collect()}
@@ -166,7 +128,7 @@ def _train_incremental(word_weights: dict, n_merges: int) -> list:
                     ws.discard(i)
                     if not ws:
                         del where[p]
-            # greedy left-to-right merge (same as _merge_fold)
+            # greedy left-to-right merge (same as bpe_reference)
             out, j = [], 0
             while j < len(s):
                 if j + 1 < len(s) and s[j] == a and s[j + 1] == b:
@@ -181,109 +143,3 @@ def _train_incremental(word_weights: dict, n_merges: int) -> list:
                 counts[p] = counts.get(p, 0) + w
                 where.setdefault(p, set()).add(i)
     return rules
-
-
-def bpe_train_with_vocab(docs: DataFrame, n_merges: int,
-                         text_col: str = "text",
-                         checkpoint_every: int = 6):
-    """Like :func:`bpe_train` but also returns the final encoded
-    vocabulary DataFrame (word, weight, syms) — the artifact the
-    APPLY side joins against. Encoding a 10^12-token corpus with a
-    trained BPE never re-runs merges per document: the vocab (word ->
-    symbol sequence) is encoded once here, and corpus encoding is a
-    word-level equi-join (see bpe_token_counts).
-
-    Job shape (r3 verdict item 8): the merge fold is a narrow map, so
-    it is applied LAZILY — each round's pair-count aggregation folds
-    the pending merges in the same job, and the vocab only
-    materializes (localCheckpoint) every `checkpoint_every` rounds to
-    keep lineage flat. That is 1 Spark job per round + 1 per k rounds
-    instead of the old 2 per round (measured 14.5 s -> 9.8 s over 106
-    merges at sf0.01, local[32] — 1.5x; the fold re-execution between
-    checkpoints caps k, k=8 measured slower than k=6). Results are
-    identical — this is a plan change; the merge ORDER is still the
-    textbook one round at a time.
-
-    Cost envelope, honestly: the argmax pair cannot be batched k
-    rounds at a time without changing semantics — merging (a,b)
-    creates new pairs (x,ab)/(ab,y) whose counts can exceed every
-    remaining candidate's, so the textbook next-argmax is only
-    knowable after the previous merge applies. A real 32k-merge
-    tokenizer on this path costs 32k vocab-sized aggregation rounds
-    (~0.1 s/round of job latency => ~1 h regardless of corpus size).
-    That is why :func:`bpe_train_local` exists: distributed count,
-    in-driver merge loop — the right tool whenever the word vocab
-    fits the driver, i.e. almost always. Keep THIS path for vocabs
-    beyond driver memory.
-    """
-    vocab = (word_counts(docs, text_col)
-             .select("word", "weight",
-                     F.concat(F.split(F.col("word"), ""),
-                              F.array(F.lit(END))).alias("syms"))
-             .localCheckpoint())
-    rules = []
-    pending = 0
-    for _ in range(n_merges):
-        pairs = vocab.select(
-            "weight",
-            F.explode(F.arrays_zip(
-                F.slice("syms", 1, F.size("syms") - 1),
-                F.slice("syms", 2, F.size("syms") - 1))).alias("p"))
-        best = (pairs.select(F.col("p.0").alias("a"),
-                             F.col("p.1").alias("b"), "weight")
-                .groupBy("a", "b").agg(F.sum("weight").alias("n"))
-                .orderBy(F.col("n").desc(), F.col("a").asc(),
-                         F.col("b").asc())
-                .limit(1).collect())
-        if not best or best[0].n < 2:
-            break
-        a, b, n = best[0].a, best[0].b, best[0].n
-        rules.append((a, b, n))
-        vocab = vocab.withColumn("syms", _merge_fold(a, b))
-        pending += 1
-        if pending >= checkpoint_every:
-            # superseded checkpoint blocks free via ContextCleaner on
-            # dereference (see graph.py — production: reliable
-            # checkpoint dir)
-            vocab = vocab.localCheckpoint()
-            pending = 0
-    if pending:
-        vocab = vocab.localCheckpoint()
-    return rules, vocab
-
-
-def bpe_token_counts(docs: DataFrame, vocab: DataFrame, rules: list,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Per-document learned-BPE token counts: explode document words,
-    equi-join the encoded vocabulary (word -> |symbols|), sum — the
-    corpus-scale APPLY step costs one broadcast-or-shuffle join, no
-    per-document merge replay. Words UNSEEN during training (the
-    distinct set left-anti the vocab — small) are encoded by running
-    the learned merge folds over them once, exactly as encoding them
-    from scratch would (the merges apply to unseen words too).
-
-    Note: the inlined-fold apply is right for the tens-to-hundreds of
-    merges an analytics pass learns; a production 30k-merge tokenizer
-    applies rules with a trie per word, not 30k plan operators.
-    """
-    norm = norm_text_sql(text_col, "spark")
-    words = (docs.select(
-                 F.col(id_col),
-                 F.explode(F.split(F.expr(norm), " ")).alias("word"))
-             .where(F.col("word") != ""))
-    seen = vocab.select("word", F.size("syms").alias("n_syms"))
-
-    unseen = (words.select("word").distinct()
-              .join(vocab.select("word"), "word", "left_anti")
-              .select("word",
-                      F.concat(F.split(F.col("word"), ""),
-                               F.array(F.lit(END))).alias("syms")))
-    for a, b, _ in rules:
-        unseen = unseen.withColumn("syms", _merge_fold(a, b))
-    sizes = seen.unionByName(
-        unseen.select("word", F.size("syms").alias("n_syms")))
-    return (words.join(sizes, "word", "left")
-            .groupBy(id_col)
-            .agg(F.sum("n_syms").alias("n_bpe_learned"),
-                 F.count(F.lit(1)).alias("n_words")))

@@ -33,6 +33,10 @@ its directories are intact because no attempt ever writes into
 another attempt's paths. `vacuum()` garbage-collects directories the
 current manifest no longer references.
 
+The base path is a local or shared POSIX path, never a URI: the
+manifests, markers and footer reads go through the driver's file API
+while Spark writes the data, so both must see the same directory.
+
 Input snapshots: `snapshot_id_of(path)` fingerprints a dataset
 directory by its data-file listing (name, size, mtime) — the
 parquet-manifest analog of an Iceberg snapshot id. Feeding it to
@@ -116,6 +120,12 @@ def _rows_per_pid(data_path: str) -> dict[int, int]:
 
 class Checkpointer:
     def __init__(self, base_path: str, spark: SparkSession | None = None):
+        # manifests, in-flight markers and footer reads use the local
+        # file API, so a URI would split the state from Spark's writes
+        if "://" in base_path:
+            raise ValueError(
+                f"Checkpointer needs a local or shared POSIX path, not a "
+                f"URI: {base_path!r}")
         self.base = base_path
         self.spark = spark
         os.makedirs(base_path, exist_ok=True)

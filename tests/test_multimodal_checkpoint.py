@@ -65,6 +65,18 @@ def test_checkpoint_load_readonly(spark, tmp_path):
     assert not ck.is_complete("ro", fp)
 
 
+def test_checkpoint_rejects_uri_before_creating_anything(tmp_path,
+                                                         monkeypatch):
+    """A URI base path raises instead of making a local `s3:/...` tree
+    that would hold the manifests while Spark writes the data to the
+    real store."""
+    monkeypatch.chdir(tmp_path)
+    for uri in ("s3://bucket/_ck", "file:///tmp/_ck"):
+        with pytest.raises(ValueError, match="POSIX path"):
+            Checkpointer(uri)
+    assert os.listdir(tmp_path) == []
+
+
 def test_checkpoint_invalidate(spark, tmp_path):
     ck = Checkpointer(str(tmp_path))
     fp = fingerprint_of("x")

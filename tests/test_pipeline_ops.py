@@ -793,69 +793,48 @@ def test_bpe_train_matches_reference_on_corpus(docs):
 
 
 def test_bpe_train_local_matches_all_paths(docs, spark):
-    """r3 verdict item 8: bpe_train_local (distributed word count +
-    in-driver incremental merge loop — the industrial job shape for
-    32k-merge tokenizers) produces EXACTLY the textbook and
-    distributed-round rules, including tie order, on the corpus and
-    on a quote/backslash/degenerate-repeat fixture."""
+    """bpe_train (distributed word count + in-driver incremental merge
+    loop) produces EXACTLY the textbook rules, including tie order, on
+    the corpus and on a quote/backslash/degenerate-repeat fixture."""
     from sparkspatial import bpe
 
     sub = docs.where("doc_id < 100").select("doc_id", "text")
     wc = {r.word: r.weight for r in bpe.word_counts(sub).collect()}
-    assert bpe.bpe_train_local(sub, 40) == bpe.bpe_reference(wc, 40)
+    assert bpe.bpe_train(sub, 40) == bpe.bpe_reference(wc, 40)
 
     hostile = spark.createDataFrame(
         [(1, "it's a\\b it's it's a\\b don't don't x'y x'y"),
          (2, "aaaa aaaa aab aab")],
         "doc_id long, text string")
     wch = {r.word: r.weight for r in bpe.word_counts(hostile).collect()}
-    want = bpe.bpe_reference(wch, 50)
-    assert bpe.bpe_train_local(hostile, 50) == want
-    assert bpe.bpe_train(hostile, 50) == want
+    assert bpe.bpe_train(hostile, 50) == bpe.bpe_reference(wch, 50)
 
 
-def test_bpe_encode_counts_match_reference(docs):
-    """APPLY side: per-doc learned-token counts from the vocab join ==
-    encoding every doc with the reference merges locally."""
+def test_bpe_train_job_ceiling(spark, sf_dir):
+    """Training runs the word count's jobs and no more: the same count
+    at 5 and 20 merges, at most 2 (46 with one Spark aggregate per
+    merge round)."""
     from sparkspatial import bpe
 
-    sub = docs.where("doc_id < 60").select("doc_id", "text")
-    rules, vocab = bpe.bpe_train_with_vocab(sub, 10)
-    got = {r.doc_id: r.n_bpe_learned
-           for r in bpe.bpe_token_counts(sub, vocab, rules).collect()}
-
-    # reference: re-encode each doc's words with the learned rules
-    wc = {r.word: r.weight for r in bpe.word_counts(sub).collect()}
-    ref_rules = bpe.bpe_reference(wc, 10)
-    assert [(a, b) for a, b, _ in rules] == \
-        [(a, b) for a, b, _ in ref_rules]
-
-    def encode(word):
-        syms = list(word) + [bpe.END]
-        for a, b, _ in ref_rules:
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i+1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return len(syms)
-
-    import re
-    want = {}
-    for r in sub.collect():
-        words = re.sub(r"\s+", " ", r.text.lower(),
-                       flags=re.ASCII).strip(" ").split(" ")
-        want[r.doc_id] = sum(encode(w) for w in words if w)
-    assert got == want
+    path = f"{sf_dir}/documents.parquet"
+    docs = spark.read.schema(spark.read.parquet(path).schema).parquet(path)
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (5, 20):
+        group = f"bpe-train-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            rules = bpe.bpe_train(docs, n)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rules) == n
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[5] == jobs[20] <= 2, jobs
 
 
 def test_bpe_handles_quotes_and_backslashes(spark):
-    """Symbols with ' or \\ must survive the inlined SQL fold (real
-    English corpora merge apostrophe pairs early)."""
+    """Symbols with ' or \\ survive training (real English corpora
+    merge apostrophe pairs early)."""
     from sparkspatial import bpe
 
     df = spark.createDataFrame(
@@ -865,33 +844,6 @@ def test_bpe_handles_quotes_and_backslashes(spark):
     wc = {r.word: r.weight for r in bpe.word_counts(df).collect()}
     assert rules == bpe.bpe_reference(wc, 6)
     assert any("'" in a or "'" in b for a, b, _ in rules)
-
-
-def test_bpe_token_counts_unseen_words_get_merges(spark):
-    """Words absent from the training corpus still receive the
-    learned merges when encoded."""
-    from sparkspatial import bpe
-
-    train = spark.createDataFrame(
-        [(1, "lowest lowest lowest newest newest newest")],
-        "doc_id long, text string")
-    rules, vocab = bpe.bpe_train_with_vocab(train, 4)
-    other = spark.createDataFrame([(7, "bestest")],
-                                  "doc_id long, text string")
-    got = bpe.bpe_token_counts(other, vocab, rules).collect()[0]
-
-    syms = list("bestest") + [bpe.END]
-    for a, b, _ in rules:
-        out, i = [], 0
-        while i < len(syms):
-            if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
-    assert got.n_bpe_learned == len(syms) < len("bestest") + 1
 
 
 # --------------------------------------------------------------- geohash

@@ -17,7 +17,9 @@ Writes ``BENCH/JOBS.json``:
 rows, plus "queries"}}`` (``jobs`` and ``seconds`` are build plus
 action) and prints one line per entry. Entries run in ``queries()``
 order in one process, so an entry that fills a session cache first
-pays for it.
+pays for it. Naming queries runs only those; when the existing file
+has the same ``sf_dir`` their entries replace its entries and the
+total is taken over every entry, else the file holds just them.
 
 Usage: python tools/jobcount.py SF_DIR [query ...]
 """
@@ -80,6 +82,16 @@ def main() -> int:
         print(f"{name:32s} build={r['build_jobs']:4d} "
               f"action={r['action_jobs']:4d} s={r['seconds']:8.2f} "
               f"rows={r['rows']}", flush=True)
+    out = os.path.join(ROOT, "BENCH", "JOBS.json")
+    if only:
+        # a partial run updates its entries in a file of the same sf_dir
+        try:
+            with open(out) as f:
+                prev = json.load(f)
+        except (OSError, json.JSONDecodeError):
+            prev = {}
+        if prev.get("sf_dir") == sf_dir:
+            per = {**prev.get("queries", {}), **per}
     total = {key: round(sum(v[key] for v in per.values()), 3)
              for key in ("build_jobs", "action_jobs", "jobs", "build_s",
                          "action_s", "seconds")}
@@ -87,7 +99,6 @@ def main() -> int:
     print(f"TOTAL build={total['build_jobs']} action={total['action_jobs']}"
           f" jobs={total['jobs']} s={total['seconds']:.1f} "
           f"queries={total['queries']}")
-    out = os.path.join(ROOT, "BENCH", "JOBS.json")
     os.makedirs(os.path.dirname(out), exist_ok=True)
     with open(out, "w") as f:
         json.dump({"sf_dir": sf_dir, "queries": per, "total": total}, f,

@@ -8,8 +8,12 @@ Cluster deployment (north_rule: pure-Python, no JARs):
         --pages  s3://bucket/pages/          \
         --zones  s3://bucket/zones.parquet   \
         --out    s3://bucket/out/            \
-        --checkpoint s3://bucket/_ck         \
+        --checkpoint /mnt/shared/_ck         \
         --res 12 --rollup 9 6 3 --salt
+
+`--checkpoint` takes a POSIX path (no URI) on a file system that the
+driver and every executor share: Spark writes the stage data there and
+the driver reads the manifests and parquet footers from the same place.
 
 Stages (each resumable through the fingerprinted checkpointer):
   1. extract: pages -> geo-marker points (Arrow UDTF)
