@@ -20,6 +20,7 @@ the test metric.
 All of them share one private core, so tie order and division order
 cannot drift apart between paths: :func:`_vectors` (float64 decode,
 zero-norm clamp), :func:`_cos` (query norm divided first),
+:func:`_threshold_pairs` (the pair cos of both threshold joins),
 :func:`_partial_topk` (exact partial top-k, ties (-cos, id)),
 :func:`_rank` (the final ``cos DESC, id ASC`` window),
 :func:`_block_pairs` and :func:`_cogroup_topk` (the two group plans).
@@ -104,6 +105,39 @@ def _cos(a: np.ndarray, na: np.ndarray, b: np.ndarray,
     could split a mathematical tie differently across the paths the
     parity tests compare rank-for-rank."""
     return (a @ b.T) / na[:, None] / nb[None, :]
+
+
+# _threshold_pairs keeps matmul candidates this far under the threshold:
+# a BLAS dot product errs by about d * 1.1e-16 relative, ~1e-14 in cos
+_CANDIDATE_SLACK = 1e-9
+
+
+def _threshold_pairs(ids_a: np.ndarray, a: np.ndarray, na: np.ndarray,
+                     ids_b: np.ndarray, b: np.ndarray, nb: np.ndarray,
+                     threshold: float, ordered: bool) -> pd.DataFrame:
+    """(id_a, id_b, cos) for every pair of an `a` row and a `b` row with
+    cos >= threshold, id_a < id_b (with `ordered`, only pairs whose `a`
+    id is the smaller one count, for `a` and `b` drawn from one set).
+
+    The matmul only picks candidates: BLAS sums a dot product in an
+    order that depends on the operands' shapes, so its last bit moves
+    with the batch or block a pair lands in. Each candidate's cos is
+    recomputed on its own, in one fixed order, with the smaller id's
+    norm divided first, so cos and the pair set are the same for every
+    batching and block count."""
+    keep = _cos(a, na, b, nb) >= threshold - _CANDIDATE_SLACK
+    if ordered:
+        keep &= ids_a[:, None] < ids_b[None, :]
+    ii, jj = np.nonzero(keep)
+    ia, ib = ids_a[ii], ids_b[jj]
+    first = ia < ib
+    dot = (a[ii] * b[jj]).sum(axis=1)
+    cos = (dot / np.where(first, na[ii], nb[jj])
+           / np.where(first, nb[jj], na[ii]))
+    hit = cos >= threshold
+    return pd.DataFrame({"id_a": np.where(first, ia, ib)[hit],
+                         "id_b": np.where(first, ib, ia)[hit],
+                         "cos": cos[hit]})
 
 
 def _partial_topk(qids: np.ndarray, ids: np.ndarray, cos: np.ndarray,
@@ -277,12 +311,9 @@ def cosine_pairs(corpus: DataFrame, threshold: float, *,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy()
-            cos = _cos(*_vectors(pdf[vec_col]), mat_b, norm_b)
-            keep = (cos >= threshold) & (ids[:, None] < ids_b[None, :])
-            ii, jj = np.nonzero(keep)
-            yield pd.DataFrame({"id_a": ids[ii], "id_b": ids_b[jj],
-                                "cos": cos[ii, jj]})
+            yield _threshold_pairs(pdf[id_col].to_numpy(),
+                                   *_vectors(pdf[vec_col]),
+                                   ids_b, mat_b, norm_b, threshold, True)
 
     return corpus.mapInPandas(_pairs, schema=schema)
 
@@ -320,19 +351,12 @@ def cosine_pairs_blocked(corpus: DataFrame, threshold: float, *,
         ids = pdf[id_col].to_numpy()
         mat, norm = _vectors(pdf[vec_col])
         if pa == pb:
-            cos = _cos(mat, norm, mat, norm)
-            ii, jj = np.nonzero((cos >= threshold)
-                                & (ids[:, None] < ids[None, :]))
-            ia, ib = ids[ii], ids[jj]
-        else:
-            blk = pdf["_blk"].to_numpy()
-            a, b = blk == pa, blk == pb
-            cos = _cos(mat[a], norm[a], mat[b], norm[b])
-            ii, jj = np.nonzero(cos >= threshold)
-            ia, ib = ids[a][ii], ids[b][jj]
-        return pd.DataFrame({"id_a": np.minimum(ia, ib),
-                             "id_b": np.maximum(ia, ib),
-                             "cos": cos[ii, jj]})
+            return _threshold_pairs(ids, mat, norm, ids, mat, norm,
+                                    threshold, True)
+        blk = pdf["_blk"].to_numpy()
+        a, b = blk == pa, blk == pb
+        return _threshold_pairs(ids[a], mat[a], norm[a], ids[b], mat[b],
+                                norm[b], threshold, False)
 
     return _block_pairs(corpus, id_col, vec_col, n_blocks).applyInPandas(
         _pairs, schema=f"id_a {id_type}, id_b {id_type}, cos double")

@@ -246,7 +246,9 @@ def quality_score_sql(col: str, dialect: str = "spark") -> str:
 def trigram_from_norm_sql(norm_col: str, dialect: str = "spark") -> str:
     """Array of character trigrams over an ALREADY-NORMALIZED column
     (empty for texts shorter than 3 chars). Same 1-based substring
-    semantics in both dialects.
+    semantics in both dialects. The DuckDB dialect is the oracle twin's;
+    the Spark dialect is the test reference for trigram_familiarity's
+    byte-offset kernel.
 
     `norm_col` MUST be a materialized column reference (not an inline
     expression): the per-element lambda references it once per trigram,
@@ -277,29 +279,21 @@ def trigram_sql(col: str, dialect: str = "spark") -> str:
     return trigram_from_norm_sql(norm_text_sql(col, dialect), dialect)
 
 
-def trigram_from_chars_sql(chars_col: str) -> str:
-    """O(n) trigram array over a MATERIALIZED per-character array
-    column (``split(norm, '')`` — code-point splitting, matching
-    substring's code-point indexing, astral chars included; pinned by
-    pytest). Spark dialect only — the hot path.
-
-    Why not :func:`trigram_from_norm_sql`: ``substring(s, i, 3)``
-    walks the UTF-8 byte stream from the start to find code point i,
-    so building all trigrams of one document is O(len²) — measured
-    15-30 s for 5k docs of ~3k chars (r6), invisible on the ~300-char
-    sf0.1 docs that hid it through r3-r5. ``element_at`` on the char
-    array is an O(1) offset lookup, so this formulation is O(len).
-    `chars_col` MUST be a materialized column reference, not an inline
-    ``split(...)`` — the lambda references it once per trigram and an
-    inlined split would re-run O(len) times per doc (the same
-    projection-collapse trap trigram_from_norm_sql documents).
-    """
-    c = chars_col
-    return (f"CASE WHEN size({c}) >= 3 THEN "
-            f"transform(sequence(1, size({c}) - 2), "
-            f"i -> concat(element_at({c}, i), element_at({c}, i + 1), "
-            f"element_at({c}, i + 2))) "
-            f"ELSE array() END")
+def _trigram_keys(docs: DataFrame, text_col: str,
+                  id_col: str) -> DataFrame:
+    """(id_col, _i, tri): one row per character trigram of each
+    document's normalized text; `_i` is its 0-based position and `tri`
+    its 12-byte UTF-32 key (the kernel :func:`trigram_familiarity`
+    describes)."""
+    return (docs
+            .select(F.col(id_col),
+                    F.expr(f"encode({norm_text_sql(text_col, 'spark')}, "
+                           "'UTF-32')").alias("_u"))
+            .selectExpr(id_col,
+                        "explode(CASE WHEN octet_length(_u) >= 12 "
+                        "THEN sequence(0, octet_length(_u) DIV 4 - 3) "
+                        "ELSE array() END) AS _i", "_u")
+            .selectExpr(id_col, "_i", "substring(_u, 4 * _i + 1, 12) AS tri"))
 
 
 def trigram_familiarity(docs: DataFrame, text_col: str = "text",
@@ -316,6 +310,20 @@ def trigram_familiarity(docs: DataFrame, text_col: str = "text",
     (no float-sum ordering, no libm log divergence); consumers derive
     avg = fam_sum / n_tri (one exact division) or integer-bucket it.
 
+    Kernel: each document's normalized text is encoded once as UTF-32
+    (`_u`), so code point i is bytes [4i, 4i + 4) and trigram i is the
+    12-byte binary key ``substring(_u, 4i + 1, 12)``. The keys are the
+    code-point trigrams of :func:`trigram_from_norm_sql` (the DuckDB
+    twin's), byte for byte; pinned by pytest on unicode, astral,
+    combining and invalid-UTF-8 text. Every lookup is an O(1) byte
+    offset, so a document costs O(len): a UTF-8 ``substring(s, i, 3)``
+    walks from the start, O(len^2) a document (15-30 s on 5k docs of
+    ~3k chars, r6). No lambda runs: Spark 4.1 evaluates ``transform``
+    and ``aggregate`` row by row outside whole-stage codegen, while
+    ``sequence``, ``explode`` and binary ``substring`` compile. The
+    CASE guard is needed because ``sequence(0, -1)`` counts down and
+    would emit keys for 1- and 2-character documents.
+
     Scale shape: the trigram explode is consumed twice but NOT
     persisted — it blows the corpus up ~chars-per-doc-fold, so caching
     it at 10^12 docs would cost orders of magnitude more memory than
@@ -326,18 +334,7 @@ def trigram_familiarity(docs: DataFrame, text_col: str = "text",
     broadcasts back; the per-doc agg combines partially before its one
     exchange.
     """
-    # project the normalized CHAR ARRAY once; the trigram lambda then
-    # does three O(1) element_at lookups per trigram instead of an
-    # O(i) substring walk — O(len) per doc, not O(len²) (r6: the
-    # substring formulation cost 15-30 s on 5k docs of ~3k chars; the
-    # r3-era fix of materializing `_n` only removed the re-normalize,
-    # not the substring walk)
-    tri = (docs
-           .select(F.col(id_col),
-                   F.split(F.expr(norm_text_sql(text_col, "spark")),
-                           "").alias("_nc"))
-           .selectExpr(id_col,
-                       f"explode({trigram_from_chars_sql('_nc')}) AS tri"))
+    tri = _trigram_keys(docs, text_col, id_col).drop("_i")
     model = tri.groupBy("tri").agg(F.count(F.lit(1)).alias("tri_n"))
     return (tri.join(F.broadcast(model), "tri")
             .groupBy(id_col)

@@ -202,24 +202,33 @@ def test_trigram_familiarity_bruteforce(spark):
     assert avg[5] == max(avg.values())
 
 
-def test_trigram_chars_path_matches_substring_path(spark):
-    """The O(n) char-array trigram formulation (r6 hot path —
-    trigram_from_chars_sql over split(norm, '')) emits the EXACT array
-    the O(n²) substring formulation does, per row, including unicode
-    (code-point indexed), astral chars (surrogate pairs must not
-    split), empty/NULL/short strings, and whitespace runs."""
+def test_trigram_kernel_matches_substring_path(spark):
+    """The UTF-32 byte-offset trigram kernel of trigram_familiarity
+    decodes, row by row and in order, to the EXACT array of the
+    code-point substring formulation (trigram_from_norm_sql, the DuckDB
+    twin's), including unicode, astral chars (surrogate pairs must not
+    split), a combining mark, invalid UTF-8 (a stray byte, a truncated
+    sequence, an encoded surrogate), empty/NULL/short strings and
+    whitespace runs."""
     rows = [("abc def ghi",), ("ab",), ("",), (None,), ("a\U0001F600b\U0001F601c",),
             ("héllo wörld",), ("  spaced  out  ",),
-            ("你好世界 xyz",)]
-    df = spark.createDataFrame(rows, "s string")
-    old = text.trigram_from_norm_sql("_n")
-    new = text.trigram_from_chars_sql("_nc")
-    both = (df.selectExpr(
-                "s",
-                f"{text.norm_text_sql('s', 'spark')} AS _n",
-                f"split({text.norm_text_sql('s', 'spark')}, '') AS _nc")
-            .selectExpr("s", f"{old} AS o", f"{new} AS c"))
-    assert both.where("NOT (o <=> c)").count() == 0
+            ("你好世界 xyz",), ("e\u0301a",)]
+    df = (spark.createDataFrame(rows, "s string")
+          .unionByName(spark.sql(
+              "SELECT CAST(X'61FF62C36364' AS STRING) AS s UNION ALL "
+              "SELECT CAST(X'EDA0804142' AS STRING)"))
+          .withColumn("id", F.monotonically_increasing_id()).persist())
+    want = {r.id: r.o for r in df.selectExpr(
+        "id", f"{text.norm_text_sql('s', 'spark')} AS _n").selectExpr(
+        "id", f"{text.trigram_from_norm_sql('_n')} AS o").collect()}
+    got = {i: [] for i in want}
+    for r in (text._trigram_keys(df, "s", "id")
+              .selectExpr("id", "_i", "decode(tri, 'UTF-32') AS t")
+              .orderBy("id", "_i").collect()):
+        got[r.id].append(r.t)
+    df.unpersist()
+    assert got == want
+    assert sum(map(len, want.values())) > 40
 
 
 def test_topk_partial_cols_exact_under_ties():
@@ -281,14 +290,18 @@ def test_cosine_pairs_matches_bruteforce(emb):
 
 def test_cosine_pairs_blocked_matches_oracle(emb):
     """The shipped distributed block-pair path (cosine_pairs_blocked)
-    produces EXACTLY the driver-broadcast oracle's pair set, for any
-    block count (1 = single group, 3 = uneven split, 8 = default)."""
-    thr = 0.35
-    want = {(r.id_a, r.id_b)
+    produces EXACTLY the driver-broadcast oracle's pairs, for any block
+    count (1 = single group, 3 and 5 = uneven splits, 8 = default), and
+    each pair's cos bit for bit: both recompute a candidate's cos in one
+    fixed summation order, smaller id's norm divided first, so a pair
+    within an ulp of the threshold cannot flip with n_blocks (a BLAS
+    matmul's last bit moves with the block shapes)."""
+    thr = 0.3
+    want = {(r.id_a, r.id_b): r.cos
             for r in sim.cosine_pairs(emb, thr).collect()}
     assert len(want) > 0
-    for nb in (1, 3, 8):
-        got = {(r.id_a, r.id_b)
+    for nb in (1, 3, 5, 8):
+        got = {(r.id_a, r.id_b): r.cos
                for r in sim.cosine_pairs_blocked(
                    emb, thr, n_blocks=nb).collect()}
         assert got == want, f"n_blocks={nb}"
